@@ -38,16 +38,12 @@ object AnalyticsQ {
     val ev = Tables.events(s, d)
       .withColumn("ud", concat(col("user_id").cast("string"), lit(":"),
         to_date(col("ts")).cast("string")))
-    // group-count-sized sketch table, but its LINEAGE is the full
-    // distinct+window pass over events — pairwiseOverlap reads it three
-    // times (pairs + two count joins), so cache the tiny result once
     val sketches = KmvSketch.sketchWithExact(ev, "event_type",
-      col("ud"), K).cache()
+      col("ud"), K)
     val overlaps = KmvSketch.pairwiseOverlap(sketches, "event_type", K)
       .withColumnRenamed("ga", "type_a").withColumnRenamed("gb", "type_b")
     // exact intersection twin: distinct (type, user-day) pairs self-joined
-    // (cached: both self-join sides read it)
-    val pairs = ev.select(col("event_type"), col("ud")).distinct().cache()
+    val pairs = ev.select(col("event_type"), col("ud")).distinct()
     val exactInter = pairs.as("x")
       .join(pairs.as("y"), col("x.ud") === col("y.ud") &&
         col("x.event_type") < col("y.event_type"))
@@ -214,9 +210,9 @@ object AnalyticsQ {
     val ev = Tables.events(s, d)
       .withColumn("ud", concat(col("user_id").cast("string"), lit(":"),
         to_date(col("ts")).cast("string")))
-    // cached for the same reason as q61: five consumers (containment's
-    // pair + per-group estimate joins, the two exact-count joins) would
-    // each replay the distinct+window pass over events
+    // cached: five consumers (containment's pair + per-group estimate
+    // joins, the two exact-count joins) would each replay the
+    // distinct+window pass over events
     val sketches = KmvSketch.sketchWithExact(ev, "event_type",
       col("ud"), K).cache()
     val conts = KmvSketch.containmentEstimates(sketches, "event_type", K)

@@ -398,24 +398,25 @@ object Relational {
     * three small per-(month, brand) results join (AQE broadcasts them).
     * Shuffle volume ≈ pre-reduced rows per branch; no Expand anywhere. */
   val q17ProductPerf: Q = Q("q17_product_perf", (s, d) => {
-    // ONE aggregation pass: Spark plans multiple DISTINCT aggregates with
-    // a single Expand (×3) + two-level hash aggregation — one scan and one
-    // exchange where the previous sums ⨝ distinct ⨝ distinct form scanned
-    // the lineitem⨝part base THREE times and shuffled five (guide §2.4:
-    // remove shuffles outright; plan diff 18 → 3 Exchange, 12 → 2 scans).
-    Tables.lineitem(s, d)
+    def base = Tables.lineitem(s, d)
       .join(broadcast(Tables.part(s, d)),
         col("l_partkey") === col("p_partkey"))
       .select(trunc(col("l_shipdate"), "month").as("month"), col("p_brand"),
         col("l_quantity"), col("l_extendedprice"), col("l_discount"),
         col("l_orderkey"), col("l_partkey"))
+    val sums = base
       .groupBy(col("month"), col("p_brand"))
       .agg(
         decSum(col("l_quantity")).as("units"),
         decSumExpr(d2(col("l_extendedprice")) * (lit(1) - dr(col("l_discount"))))
-          .as("revenue"),
-        countDistinct(col("l_orderkey")).as("n_orders"),
-        countDistinct(col("l_partkey")).as("n_parts"))
+          .as("revenue"))
+    def distinctCount(key: String, as: String) =
+      base.select(col("month"), col("p_brand"), col(key)).distinct()
+        .groupBy(col("month"), col("p_brand"))
+        .agg(count(lit(1)).as(as))
+    sums
+      .join(distinctCount("l_orderkey", "n_orders"), Seq("month", "p_brand"))
+      .join(distinctCount("l_partkey", "n_parts"), Seq("month", "p_brand"))
       .orderBy(col("month"), col("p_brand"))
   }, Some(s"""
     SELECT CAST(date_trunc('month', l_shipdate) AS DATE) AS month, p_brand,
