@@ -10,6 +10,14 @@ import org.apache.spark.sql.functions._
   * outputs match the reference SQL), so this file reads as a line-for-line
   * mirror of the YAML.
   *
+  * Evaluation: within one gate ([[staging]] or [[marts]]) each model is
+  * resolved once and shared by all its checks — nothing writes while a
+  * gate runs. A model's row predicates (not_null, ge_0, gt_0,
+  * expression_is_true) fuse into one conditional-count aggregate
+  * ([[Quality.violations]]) that [[Quality.run]] evaluates as one task;
+  * `unique` and `relationships` stay one job each. Names, order and
+  * counts are those of one query per check.
+  *
   * Null semantics note: dbt_utils.expression_is_true lets NULL rows pass
   * (`where not(expr)` drops unknowns); Quality.expressionIsTrue counts
   * them as violations — STRICTER, and every expression-tested column here
@@ -22,9 +30,8 @@ object SchemaTests {
   /** The whole corpus over materialized tables (`t`: model name → table).
     * Grouped as (staging, marts) so the pipeline can gate each layer as
     * it completes, dbt-style. */
-  def staging(t: String => DataFrame): Seq[(String, () => Long)] = {
-    val b = Seq.newBuilder[(String, () => Long)]
-    add(b, t)(
+  def staging(t: String => DataFrame): Seq[(String, () => Long)] =
+    gate(t)(
       nn("stg_clickstream_events", "event_id"),
       uq("stg_clickstream_events", "event_id"),
       nn("stg_clickstream_events", "event_ts"),
@@ -44,12 +51,9 @@ object SchemaTests {
       nn("stg_order_items", "order_id"),
       nn("stg_order_items", "product_id"),
       gt0("stg_order_items", "quantity"))
-    b.result()
-  }
 
-  def marts(t: String => DataFrame): Seq[(String, () => Long)] = {
-    val b = Seq.newBuilder[(String, () => Long)]
-    add(b, t)(
+  def marts(t: String => DataFrame): Seq[(String, () => Long)] =
+    gate(t)(
       // fact_events
       nn("fact_events", "event_id"),
       uq("fact_events", "event_id"),
@@ -157,44 +161,65 @@ object SchemaTests {
       nn("metrics_product_performance_daily", "product_revenue"),
       ge0("metrics_product_performance_daily", "product_revenue"),
       ge0("metrics_product_performance_daily", "avg_price"))
-    b.result()
-  }
 
   def corpus(t: String => DataFrame): Seq[(String, () => Long)] =
     staging(t) ++ marts(t)
 
   // ── tiny declaration DSL so the lists above read like the YAML ──
-  private sealed trait Decl {
-    def toCheck(t: String => DataFrame): (String, () => Long)
+  private sealed trait Decl { def name: String }
+  /** A row predicate of model `m`: `violation` is true, never NULL, on a
+    * failing row. */
+  private sealed trait RowDecl extends Decl {
+    def m: String; def violation: Column
   }
-  private final case class nn(m: String, c: String) extends Decl {
-    def toCheck(t: String => DataFrame) =
-      s"$m.$c.not_null" -> (() => Quality.notNull(t(m), c))
+  /** A check that is its own job. */
+  private sealed trait JobDecl extends Decl {
+    def count(t: String => DataFrame): Long
   }
-  private final case class uq(m: String, c: String) extends Decl {
-    def toCheck(t: String => DataFrame) =
-      s"$m.$c.unique" -> (() => Quality.unique(t(m), Seq(c)))
+  private final case class nn(m: String, c: String) extends RowDecl {
+    def name = s"$m.$c.not_null"
+    def violation = col(c).isNull
   }
-  private final case class ge0(m: String, c: String) extends Decl {
-    def toCheck(t: String => DataFrame) =
-      s"$m.$c.ge_0" -> (() => Quality.expressionIsTrue(t(m), col(c) >= 0))
+  private final case class uq(m: String, c: String) extends JobDecl {
+    def name = s"$m.$c.unique"
+    def count(t: String => DataFrame) = Quality.unique(t(m), Seq(c))
   }
-  private final case class gt0(m: String, c: String) extends Decl {
-    def toCheck(t: String => DataFrame) =
-      s"$m.$c.gt_0" -> (() => Quality.expressionIsTrue(t(m), col(c) > 0))
+  private final case class ge0(m: String, c: String) extends RowDecl {
+    def name = s"$m.$c.ge_0"
+    def violation = Quality.notTrue(col(c) >= 0)
+  }
+  private final case class gt0(m: String, c: String) extends RowDecl {
+    def name = s"$m.$c.gt_0"
+    def violation = Quality.notTrue(col(c) > 0)
   }
   private final case class rel(m: String, c: String, pm: String, pc: String)
-      extends Decl {
-    def toCheck(t: String => DataFrame) =
-      s"$m.$c.relationships_$pm.$pc" ->
-        (() => Quality.relationships(t(m), c, t(pm), pc))
+      extends JobDecl {
+    def name = s"$m.$c.relationships_$pm.$pc"
+    def count(t: String => DataFrame) =
+      Quality.relationships(t(m), c, t(pm), pc)
   }
   private final case class expr(m: String, label: String, e: Column)
-      extends Decl {
-    def toCheck(t: String => DataFrame) =
-      s"$m.$label" -> (() => Quality.expressionIsTrue(t(m), e))
+      extends RowDecl {
+    def name = s"$m.$label"
+    def violation = Quality.notTrue(e)
   }
-  private def add(b: scala.collection.mutable.Builder[(String, () => Long),
-      Seq[(String, () => Long)]], t: String => DataFrame)(ds: Decl*): Unit =
-    ds.foreach(d => b += d.toCheck(t))
+
+  /** One gate's checks, in declaration order: each model resolved at most
+    * once, each model's row predicates one shared aggregate. */
+  private def gate(t: String => DataFrame)(
+      ds: Decl*): Seq[(String, () => Long)] = {
+    val frames = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]
+    val table: String => DataFrame = m => frames.computeIfAbsent(m, _ => t(m))
+    val shared = ds.collect { case r: RowDecl => r }.groupBy(_.m).values
+      .flatMap { rs =>
+        val counts = () => Quality.violations(table(rs.head.m),
+          rs.map(r => r.name -> r.violation)).map(_.violations)
+        rs.zipWithIndex.map { case (r, i) =>
+          r -> new Quality.Shared(counts, i) }
+      }.toMap[Decl, () => Long]
+    ds.map {
+      case r: RowDecl => r.name -> shared(r)
+      case j: JobDecl => j.name -> (() => j.count(table))
+    }
+  }
 }

@@ -13,8 +13,11 @@ import org.apache.spark.sql.functions._
   *
   * Scale notes: every check is a single aggregation with map-side partials
   * (`count` over a filter) or one shuffle (`unique` groupBy, `relationships`
-  * anti-join with the parent side broadcast when small). Checks never
-  * collect rows, only counts.
+  * anti-join with the parent side broadcast when small). Row-predicate
+  * checks over the same DataFrame fuse into ONE conditional-count
+  * aggregate ([[violations]]): one scan, one plan to compile and one job
+  * for all of them, which is what a gate of many cheap checks is bound
+  * by. Checks never collect rows, only counts.
   */
 object Quality {
 
@@ -43,7 +46,33 @@ object Quality {
 
   /** dbt_utils.expression_is_true: rows where the expression is NOT true. */
   def expressionIsTrue(df: DataFrame, e: Column): Long =
-    df.filter(!coalesce(e, lit(false))).count()
+    df.filter(notTrue(e)).count()
+
+  /** The row predicate of [[expressionIsTrue]]: `e` is false or NULL. */
+  def notTrue(e: Column): Column = !coalesce(e, lit(false))
+
+  /** Row-predicate checks fused: for each named VIOLATION predicate, the
+    * number of rows where it is true, all from one `count_if` aggregate.
+    * A predicate that can be NULL goes uncounted on those rows, so pass
+    * `isNull` (the [[notNull]] predicate) or [[notTrue]] (the
+    * [[expressionIsTrue]] one) to get exactly their counts. */
+  def violations(df: DataFrame,
+      predicates: Seq[(String, Column)]): Seq[CheckResult] = {
+    require(predicates.nonEmpty, "at least one predicate")
+    val counts = predicates.indices.map(i =>
+      count_if(predicates(i)._2).as(s"__graft_v$i"))
+    val row = df.agg(counts.head, counts.tail: _*).first()
+    predicates.indices.map(i => CheckResult(predicates(i)._1, row.getLong(i)))
+  }
+
+  /** A check whose count is one slot of an evaluation it shares with
+    * other checks (`counts` returns every slot, e.g. [[violations]]).
+    * Called alone it evaluates the whole share; [[run]] evaluates each
+    * share once, as ONE pool task, for all the checks that hold it. */
+  final class Shared(val counts: () => Seq[Long], val slot: Int)
+      extends (() => Long) {
+    def apply(): Long = counts()(slot)
+  }
 
   /** Freshness: violation iff max(tsCol) is older than `maxAgeSeconds`.
     * The clock is injectable so the check is deterministic under test;
@@ -81,17 +110,30 @@ object Quality {
   }
 
   /** Evaluate a named suite; throws if any check fails (dbt_runner.py:43-44
-    * semantics) unless failFast=false, in which case results are returned. */
+    * semantics) unless failFast=false, in which case results are returned.
+    * Checks holding the same [[Shared]] evaluation are one unit of work;
+    * every other check is its own. Results keep the order of `checks`. */
   def run(checks: Seq[(String, () => Long)],
           failFast: Boolean = false,
           parallelism: Int = 8): Seq[CheckResult] = {
-    // checks are independent read-only counts; running them from a
+    // a unit is one evaluation plus the (check position, slot) pairs it
+    // answers: one per Shared evaluation, one per plain check (keyed on
+    // its position, so a thunk listed twice still runs once per name)
+    val byKey = scala.collection.mutable.LinkedHashMap
+      .empty[Any, (() => Seq[Long], Vector[(Int, Int)])]
+    checks.indices.foreach { i => checks(i)._2 match {
+      case s: Shared =>
+        val (_, at) = byKey.getOrElse(s.counts, (s.counts, Vector.empty))
+        byKey(s.counts) = (s.counts, at :+ (i -> s.slot))
+      case f => byKey(i) = (() => Seq(f()), Vector(i -> 0))
+    }}
+    val units = byKey.values.toSeq
+    // units are independent read-only counts; running them from a
     // driver-side pool overlaps their Spark jobs (scheduler interleaves
     // stages), collapsing a 100+-check gate from sum-of-latencies to
     // roughly the longest few — same results, same order
-    val results =
-      if (parallelism <= 1 || checks.size <= 1)
-        checks.map { case (n, f) => CheckResult(n, f()) }
+    val counts: Seq[Seq[Long]] =
+      if (parallelism <= 1 || units.size <= 1) units.map(_._1())
       else {
         // SparkContext scheduler thread-locals (job group, pool, tags,
         // description) do not cross into executor-pool threads; copy the
@@ -105,14 +147,14 @@ object Quality {
         val inherited = callerCtx.toSeq.flatMap(sc =>
           schedulerKeys.map(k => k -> sc.getLocalProperty(k)))
         val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.min(parallelism, checks.size))
+          math.min(parallelism, units.size))
         try {
-          checks.map { case (n, f) =>
-            pool.submit(new java.util.concurrent.Callable[CheckResult] {
-              override def call(): CheckResult = {
+          units.map { case (evaluate, _) =>
+            pool.submit(new java.util.concurrent.Callable[Seq[Long]] {
+              override def call(): Seq[Long] = {
                 callerCtx.foreach(sc => inherited.foreach {
                   case (k, v) => sc.setLocalProperty(k, v) })
-                CheckResult(n, f())
+                evaluate()
               }
             })
           }.map { fut =>
@@ -128,6 +170,11 @@ object Quality {
           }
         } finally pool.shutdown()
       }
+    val found = new Array[Long](checks.size)
+    units.zip(counts).foreach { case ((_, at), cs) =>
+      at.foreach { case (i, slot) => found(i) = cs(slot) } }
+    val results =
+      checks.indices.map(i => CheckResult(checks(i)._1, found(i)))
     val bad = results.filter(!_.passed)
     if (failFast && bad.nonEmpty)
       throw new IllegalStateException(

@@ -2,8 +2,8 @@ package graft.plans
 
 import graft.operators.PartitionedSnapshots
 import org.apache.spark.sql.{Column, Row, SparkSession}
-import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, Coalesce, EqualTo, Expression, If, Literal, Not}
+import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedFunction}
+import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, Coalesce, EqualTo, Expression, If, InheritAnalysisRules, Literal, Not, RuntimeReplaceable}
 import org.apache.spark.sql.catalyst.plans.QueryPlan
 import org.apache.spark.sql.catalyst.plans.logical.{Assignment, DeleteAction, InsertAction, LogicalPlan, MergeIntoTable, UpdateAction, UpdateTable}
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -105,6 +105,7 @@ class SnapshotMergeRule(spark: SparkSession) extends Rule[LogicalPlan] {
   private def convertUpdate(u: UpdateTable,
       t: SnapshotDmlTable): LogicalPlan = {
     def plain(e: Expression): Expression = e.transform {
+      case r: RuntimeReplaceable with InheritAnalysisRules => call(r, plain)
       case a: AttributeReference => UnresolvedAttribute(Seq(a.name))
     }
     val set = u.assignments.map {
@@ -116,6 +117,13 @@ class SnapshotMergeRule(spark: SparkSession) extends Rule[LogicalPlan] {
     SnapshotUpdateCommand(t.tablePath, set,
       Bridge.toColumn(u.condition.map(plain).getOrElse(Literal(true))), t)
   }
+
+  /** An analyzed function like BETWEEN carries a replacement built over
+    * its resolved arguments, which breaks once they are un-resolved; so
+    * re-emit the call as the parser does, over translated arguments. */
+  private def call(r: RuntimeReplaceable with InheritAnalysisRules,
+      f: Expression => Expression): Expression =
+    UnresolvedFunction(r.prettyName, r.parameters.map(f), isDistinct = false)
 
   private def fail(msg: String): Nothing =
     throw new UnsupportedOperationException(
@@ -133,6 +141,7 @@ class SnapshotMergeRule(spark: SparkSession) extends Rule[LogicalPlan] {
     // rewrite resolved attrs to the __t_/__s_ aliases MergeClauses joins
     // under; everything else (literals, functions) passes through
     def xlate(e: Expression): Expression = e.transform {
+      case r: RuntimeReplaceable with InheritAnalysisRules => call(r, xlate)
       case a: AttributeReference if tgtSet.contains(a) =>
         UnresolvedAttribute(Seq(s"__t_${a.name}"))
       case a: AttributeReference if srcSet.contains(a) =>

@@ -210,14 +210,11 @@ object AnalyticsQ {
     val ev = Tables.events(s, d)
       .withColumn("ud", concat(col("user_id").cast("string"), lit(":"),
         to_date(col("ts")).cast("string")))
-    // cached: five consumers (containment's pair + per-group estimate
-    // joins, the two exact-count joins) would each replay the
-    // distinct+window pass over events
     val sketches = KmvSketch.sketchWithExact(ev, "event_type",
-      col("ud"), K).cache()
+      col("ud"), K)
     val conts = KmvSketch.containmentEstimates(sketches, "event_type", K)
       .withColumnRenamed("ga", "type_a").withColumnRenamed("gb", "type_b")
-    val pairs = ev.select(col("event_type"), col("ud")).distinct().cache()
+    val pairs = ev.select(col("event_type"), col("ud")).distinct()
     val exactInter = pairs.as("x")
       .join(pairs.as("y"), col("x.ud") === col("y.ud") &&
         col("x.event_type") < col("y.event_type"))

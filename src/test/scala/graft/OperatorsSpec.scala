@@ -680,6 +680,31 @@ class QualitySpec extends AnyFunSuite {
     assert(Quality.expressionIsTrue(child, col("id") <= 2) == 1)
   }
 
+  test("violations: one aggregate gives each predicate's own count; " +
+      "checks sharing an evaluation run it once, in their own order") {
+    val df = Seq((Some(1L), Some(-1L)), (None, Some(2L)), (Some(3L), None))
+      .toDF("a", "b")
+    assert(Quality.violations(df, Seq(
+      "a.not_null" -> col("a").isNull,
+      "b.ge_0" -> Quality.notTrue(col("b") >= 0))) == Seq(
+      Quality.CheckResult("a.not_null", Quality.notNull(df, "a")),
+      Quality.CheckResult("b.ge_0",
+        Quality.expressionIsTrue(df, col("b") >= 0))))
+    val evals = new java.util.concurrent.atomic.AtomicInteger
+    val counts = () => { evals.incrementAndGet(); Seq(5L, 0L) }
+    val checks: Seq[(String, () => Long)] = Seq(
+      "x" -> new Quality.Shared(counts, 1),
+      "plain" -> (() => 3L),
+      "y" -> new Quality.Shared(counts, 0))
+    Seq(1, 4).foreach { p =>
+      evals.set(0)
+      assert(Quality.run(checks, parallelism = p)
+        .map(r => r.name -> r.violations) ==
+        Seq("x" -> 0L, "plain" -> 3L, "y" -> 5L))
+      assert(evals.get == 1, s"parallelism $p")
+    }
+  }
+
   test("run with failFast raises on violations, reports otherwise") {
     val df = Seq((1L, Option.empty[Long])).toDF("id", "fk")
     val checks = Seq("fk_not_null" -> (() => Quality.notNull(df, "fk")))

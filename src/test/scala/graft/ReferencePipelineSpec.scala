@@ -19,7 +19,9 @@ class ReferencePipelineSpec extends AnyFunSuite {
 
     // first build from scratch
     val results = p.run(ev6, ord6)
-    assert(results.size >= 95, s"only ${results.size} checks ran")
+    assert(results.size == 110 && results.map(_.name).distinct.size == 110,
+      s"${results.size} checks ran, " +
+        s"${results.map(_.name).distinct.size} distinct names")
     assert(results.forall(_.passed))
     p.modelPaths.keys.foreach { n =>
       assert(p.table(n).count() > 0, s"$n is empty")

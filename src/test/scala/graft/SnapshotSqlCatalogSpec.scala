@@ -208,6 +208,24 @@ class SnapshotSqlCatalogSpec extends AnyFunSuite {
     assert(PS.currentVersion(t).contains(3L))
   }
 
+  test("BETWEEN in an UPDATE condition and a MERGE clause condition " +
+      "resolves and selects exactly its rows") {
+    val t = s"$root/btw"
+    PS.write(spark, t, (1L to 20L).map(k => (k, s"p${k % 4}", 0))
+      .toDF("k", "d", "c"), "d")
+    spark.sql("UPDATE snap.btw SET c = 1 WHERE k BETWEEN 1 AND 10")
+    assert(spark.sql("SELECT k FROM snap.btw WHERE c = 1").as[Long]
+      .collect().toSet == (1L to 10L).toSet)
+    (1L to 20L).map(k => (k, s"p${k % 4}", 9)).toDF("k", "d", "c")
+      .createOrReplaceTempView("btw_src")
+    spark.sql("""
+      MERGE INTO snap.btw t USING btw_src s ON t.k = s.k
+      WHEN MATCHED AND t.k BETWEEN 1 AND 3 THEN UPDATE SET c = 2
+    """)
+    assert(spark.sql("SELECT c, count(*) FROM snap.btw GROUP BY c")
+      .as[(Int, Long)].collect().toSet == Set((2, 3L), (1, 7L), (0, 10L)))
+  }
+
   test("CREATE TABLE + first INSERT and CTAS establish v1 through the" +
       " commit protocol") {
     spark.sql("CREATE TABLE snap.created (k BIGINT, d STRING, v STRING)" +
