@@ -1,655 +1,80 @@
 package graft
 
+import graft.queries.Q
 import org.apache.spark.sql.SparkSession
 
-/** Benchmark main: runs every catalog query on SPARK_GRAFT_SF_DIR and
-  * prints ONE JSON line with per-query wall-clock seconds.
-  * Progress goes to stderr so a hung query is identifiable. */
+/** Benchmark main: times every catalog query on SPARK_GRAFT_SF_DIR and
+  * prints ONE JSON line with per-query wall-clock seconds to stdout.
+  * Progress goes to stderr so a hung query is identifiable.
+  *
+  * Launch with `-XX:ReservedCodeCacheSize=1g` and the recompilation
+  * cutoffs off (`-XX:PerMethodRecompilationCutoff=-1
+  * -XX:PerBytecodeRecompilationCutoff=-1`): the catalog's generated
+  * classes overflow the JVM's default 240 MB code cache, and once the
+  * cache sweeper or a cutoff pins hot methods at C1/interpreted, later
+  * queries run several times slower on the same code and data. */
 object Bench {
-
-  /** Reserved JIT code cache of this JVM, in MB. The bench compiles ~150
-    * generated classes; whether that fits decides the execution strategy
-    * below. */
-  private def codeCacheMb: Long = {
-    import scala.jdk.CollectionConverters._
-    java.lang.management.ManagementFactory.getMemoryPoolMXBeans.asScala
-      // segmented cache (default): "CodeHeap 'non-nmethods'" etc.;
-      // -XX:-SegmentedCodeCache: a single pool named "CodeCache"
-      .filter(p => p.getName.startsWith("CodeHeap") || p.getName == "CodeCache")
-      .map(_.getUsage.getMax).sum / (1024 * 1024)
-  }
-
-  /** Re-launch this main in a FRESH child JVM with the JIT flags the
-    * bench needs (round-7 driver-run mitigation). Two measured failure
-    * modes this removes, both producing the "cpu_s inflated ~10× with
-    * flat runq/steal" signature on byte-identical code and data:
-    *  - a launcher without `-XX:ReservedCodeCacheSize=1g`: the suite's
-    *    ~150 generated classes overflow the 240 MB default, the sweeper
-    *    flushes HOT methods, and every later query re-compiles (and
-    *    meanwhile runs interpreted);
-    *  - a JVM that already ran other Spark work (a verify pass sharing
-    *    the process): polluted profiles deoptimize shared paths until
-    *    HotSpot's per-method recompilation cutoff STICKS them at
-    *    C1/interpreted for the rest of the suite.
-    * The child inherits the parent's args (heap, --add-opens) plus the
-    * explicit flags; `PerMethodRecompilationCutoff=-1` removes the
-    * stuck-at-C1 cliff. Child stdout/stderr stream through LIVE (round
-    * 16: the round-15 gate run was killed by the driver's timeout while
-    * the parent still held the child's captured-but-unprinted stdout —
-    * streaming means every partial scoreboard line the child prints is
-    * already in the driver's capture when a timeout lands), and a parent
-    * shutdown hook kills the child so a timed-out parent never leaves an
-    * orphan JVM burning the host. Fork failure falls back to inline. */
-  private def forkFresh(): Option[Int] = try {
-    import scala.jdk.CollectionConverters._
-    val javaBin = java.nio.file.Paths.get(
-      sys.props("java.home"), "bin", "java").toString
-    val inherited = java.lang.management.ManagementFactory
-      .getRuntimeMXBean.getInputArguments.asScala.toSeq
-      .filterNot(a => a.startsWith("-agentlib") ||
-        a.startsWith("-javaagent") || a.startsWith("-Xrunjdwp"))
-    val flags = Seq(
-      "-XX:ReservedCodeCacheSize=1g",
-      "-XX:PerMethodRecompilationCutoff=-1",
-      "-XX:PerBytecodeRecompilationCutoff=-1")
-    // under spark-submit the APP jar rides a runtime classloader, not
-    // java.class.path — locate our own jar and append it, or the child
-    // dies with ClassNotFoundException: graft.Bench and the suite runs
-    // inline without the recompilation-cutoff flags (5-10x cpu
-    // inflation on window/iterative queries)
-    val cp0 = sys.props("java.class.path")
-    // every hop Option-wrapped: some launchers hand back a null location
-    // or an opaque (non-file) URI whose getPath is null — a non-file
-    // code source just skips the jar append instead of NPE-ing the fork
-    val selfJar = Option(Bench.getClass.getProtectionDomain.getCodeSource)
-      .flatMap(cs => Option(cs.getLocation))
-      .flatMap(l => scala.util.Try(Option(l.toURI.getPath)).toOption.flatten)
-      .filter(p => p.endsWith(".jar") &&
-        !cp0.split(java.io.File.pathSeparatorChar).contains(p))
-    val cp = selfJar.map(j =>
-      s"$cp0${java.io.File.pathSeparatorChar}$j").getOrElse(cp0)
-    val cmd = (Seq(javaBin) ++ inherited ++ flags ++
-      Seq("-cp", cp, "graft.Bench")).asJava
-    val pb = new ProcessBuilder(cmd)
-    pb.environment().put("SPARK_GRAFT_FORKED", "1")
-    pb.redirectError(ProcessBuilder.Redirect.INHERIT)
-    pb.redirectOutput(ProcessBuilder.Redirect.INHERIT)
-    System.err.println("[bench] forking fresh JVM (code cache 1g, " +
-      "recompilation cutoff off)")
-    val p = pb.start()
-    // the driver's timeout TERMs the parent (spark-submit); without this
-    // hook the child keeps running detached — the round-15 failure mode
-    val killChild = new Thread(() => p.destroyForcibly())
-    Runtime.getRuntime.addShutdownHook(killChild)
-    val code = p.waitFor()
-    try Runtime.getRuntime.removeShutdownHook(killChild)
-    catch { case _: Throwable => () }
-    if (code == 0) Some(0)
-    else {
-      System.err.println(s"[bench] forked JVM exited $code — " +
-        "falling back to inline run")
-      None
-    }
-  } catch { case e: Throwable =>
-    System.err.println(s"[bench] fork failed (${e.getMessage}) — inline")
-    None
-  }
+  /** The reader keeps only the last ~2000 chars of stdout, and a line
+    * that does not fit entirely cannot be parsed at all. */
+  val MaxLine = 1900
 
   def main(args: Array[String]): Unit = {
-    if (sys.env.getOrElse("SPARK_GRAFT_FORKED", "0") != "1" &&
-        sys.env.getOrElse("SPARK_GRAFT_NO_FORK", "0") != "1" &&
-        forkFresh().isDefined) return
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // Whole-stage codegen across 40 distinct complex plans wants >512MB
-    // of JIT code cache (JVM default 240MB). Best numbers come from
-    // launching with --driver-java-options "-XX:ReservedCodeCacheSize=1g"
-    // (measured 381s -> 117s); warn when the launcher didn't.
-    if (codeCacheMb < 512)
-      System.err.println(s"[bench] WARNING: JIT code cache is only " +
-        s"${codeCacheMb}MB; launch with -XX:ReservedCodeCacheSize=1g for " +
-        "stable timings (see PLANS.md)")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // HotSpot never JIT-compiles methods over 8 KB bytecode; Spark's
-      // default hugeMethodLimit (65535) lets whole-stage codegen emit
-      // methods the JVM then runs interpreted AND spends tens of seconds
-      // trying to compile (measured: q01 172s -> 3s). Cap at the JIT limit
-      // so pathological fusions fall back to non-fused codegen.
-      .config("spark.sql.codegen.hugeMethodLimit", "8000")
-      // Test tables are SINGLE parquet files; with the default 128 MB
-      // split size every scan is one task and the whole query runs on one
-      // core. 4 MB splits parallelize local scans; a real cluster's
-      // many-file tables make this knob irrelevant there.
-      .config("spark.sql.files.maxPartitionBytes", "4194304")
-      // 40 queries x several codegen units overflow the default 100-entry
-      // generated-class cache; evictions force re-compiles that land on
-      // random late queries (the warmup pass is useless if its classes
-      // are evicted before the timed pass reuses them)
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Per-query warmup AT THE TARGET SF, immediately before timing that
-    // query: run the query once untimed, then time the second run. Two
-    // failed alternatives, both measured:
-    //  - one up-front warmup pass over all 40 plans: the suite generates
-    //    more hot code than the JIT keeps resident, so a query's compiled
-    //    methods are flushed/deoptimized by the 39 plans between its warmup
-    //    and its timed run (d02: 58s timed vs 3.9s when warmed adjacently);
-    //  - per-query warmup at a smaller SF: AQE picks size-dependent
-    //    physical plans, so the generated code at sf0.001 is NOT the code
-    //    the sf0.1 run needs and the timed run pays a fresh 8-36s JIT storm.
-    // Same-SF adjacent warmup guarantees identical generated code and hot
-    // JIT state — the timed number is steady-state compute, the regime a
-    // long-running cluster job operates in. Set SPARK_GRAFT_WARMUP=off to
-    // measure one-shot (compile-included) wall-clock instead.
-    val warmup = sys.env.getOrElse("SPARK_GRAFT_WARMUP", "on") != "off"
-    val jit = java.lang.management.ManagementFactory.getCompilationMXBean
-    def gcMs: Long = {
-      import scala.jdk.CollectionConverters._
-      java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-        .asScala.map(_.getCollectionTime).sum
-    }
-    // --- CPU-steal attribution (round-6 judge ask #2): when a run is slow
-    // with flat jit/gc, WHERE did the wall-clock go? Three counters around
-    // each run answer it with measurements instead of guesses:
-    //  - cpu_s: this JVM's actual on-CPU seconds (process CPU time) — a
-    //    slow run whose cpu_s matches its fast twin did the same work and
-    //    simply didn't get scheduled;
-    //  - runq_s: run-queue WAIT summed over all JVM threads
-    //    (/proc/self/task/*/schedstat field 2 = ns runnable-but-waiting)
-    //    — the direct "we were ready, the host didn't run us" signal;
-    //  - host_steal_s: the host's hypervisor-steal jiffies delta
-    //    (/proc/stat cpu line field 8) — VM-level contention.
-    def processCpuNs: Long =
-      java.lang.management.ManagementFactory.getOperatingSystemMXBean match {
-        case os: com.sun.management.OperatingSystemMXBean => os.getProcessCpuTime
-        case _ => 0L
-      }
-    def runqWaitNs: Long =
-      try {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.list(java.nio.file.Paths.get("/proc/self/task"))
-          .iterator().asScala.map { t =>
-            try new String(java.nio.file.Files.readAllBytes(
-              t.resolve("schedstat"))).split("\\s+")(1).toLong
-            catch { case _: Throwable => 0L } // task exited mid-iteration
-          }.sum
-      } catch { case _: Throwable => 0L }
-    def hostStealJiffies: Long =
-      try {
-        val cpu = scala.io.Source.fromFile("/proc/stat").getLines()
-          .find(_.startsWith("cpu ")).getOrElse("")
-        val f = cpu.trim.split("\\s+")
-        if (f.length > 8) f(8).toLong else 0L
-      } catch { case _: Throwable => 0L }
-    //  - code_cache_mb: JIT code cache OCCUPANCY after the run. The d06
-    //    attribution (round 8): in-suite slow runs show cpu_s inflated
-    //    10-17× over the isolated baseline with flat runq/steal — the
-    //    extra wall-clock is the JVM re-running interpreted/deoptimized
-    //    code during compile churn, and a near-full code cache (sweeper
-    //    flushing hot methods) is the trigger this column makes visible.
-    def codeCacheUsedMb: Long = {
-      import scala.jdk.CollectionConverters._
-      java.lang.management.ManagementFactory.getMemoryPoolMXBeans.asScala
-        .filter(p => p.getName.startsWith("CodeHeap") ||
-          p.getName == "CodeCache")
-        .map(_.getUsage.getUsed).sum / (1024 * 1024)
-    }
-    // Local-iteration filter (SPARK_GRAFT_ONLY=s04_ivf_search,q17_...);
-    // the driver never sets it, so driver runs always cover the catalog.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val catalog = only.fold(SparkEntry.catalog)(f =>
-      SparkEntry.catalog.filter(q => f(q.name)))
-    // ── per-run storage-cache telemetry (round-8 judge ask #1) ──
-    // d05/d09/d10 share cached intermediates (SimilarityQ.normed, DedupQ
-    // bigramSets); the r8 driver-run inflation hypothesis is storage
-    // eviction forcing silent re-computation. Count RDD block adds and
-    // drops around each timed run so a churn-inflated sample carries its
-    // own evidence: evicted≈0 with inflated cpu_s rules the hypothesis
-    // OUT; evicted≫0 confirms it. Listener-bus events are async, so the
-    // counts are directional under load — enough to separate "evicted
-    // and recomputed" from "never evicted".
-    val blocksAdded = new java.util.concurrent.atomic.AtomicLong
-    val blocksDropped = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onBlockUpdated(
-            e: org.apache.spark.scheduler.SparkListenerBlockUpdated): Unit = {
-          val i = e.blockUpdatedInfo
-          if (i.blockId.isRDD) {
-            if (i.storageLevel.isValid) blocksAdded.incrementAndGet()
-            else blocksDropped.incrementAndGet()
-          }
-        }
-      })
-    // ── historical bests (round-8 judge ask #1) ──
-    // BENCH_BEST.json is COMMITTED, so the driver's harness run sees the
-    // builder's best-known per-query time/cpu. A query whose best
-    // in-suite cpu_s still exceeds 3× its best-known cpu_s (and by >1s
-    // absolute) is flagged as harness-inflated and re-sampled once at
-    // the END of the suite — fresh storage state, JIT long settled —
-    // with every sample reported in BENCH_DETAIL. The reported time is
-    // the min over all samples: each sample performs the full
-    // computation, and a genuine regression stays slow in the requeue
-    // run too, so the min never hides real slowness.
-    val bestPath = sys.env.getOrElse("SPARK_GRAFT_BEST",
-      "/root/repo/BENCH_BEST.json")
-    // per-entry round stamp (round-10 judge ask #7): each best-known
-    // records WHICH round set it, so stale bars are visible — and when
-    // the builder runs with SPARK_GRAFT_ROUND set, an entry more than 2
-    // rounds stale is RE-BASELINED to this run's fresh sample (bests set
-    // under a long-gone host regime stop defining the requeue bar).
-    // Entries without a stamp (pre-round-11 files) parse as round 0.
-    val bestRe = ("\"([^\"]+)\":\\{\"time\":([0-9.eE+-]+)," +
-      "\"cpu_s\":([0-9.eE+-]+)(?:,\"round\":([0-9]+))?\\}").r
-    val roundNow: Option[Int] =
-      sys.env.get("SPARK_GRAFT_ROUND").flatMap(s =>
-        scala.util.Try(s.trim.toInt).toOption)
-    val (hist, histRound): (Map[String, (Double, Double)], Map[String, Int]) =
-      try {
-        val txt = new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get(bestPath)), "UTF-8")
-        val parsed = bestRe.findAllMatchIn(txt).map(m => (m.group(1),
-          m.group(2).toDouble, m.group(3).toDouble,
-          Option(m.group(4)).map(_.toInt).getOrElse(0))).toSeq
-        (parsed.map(p => p._1 -> ((p._2, p._3))).toMap,
-          parsed.map(p => p._1 -> p._4).toMap)
-      } catch { case _: Throwable => (Map.empty, Map.empty) }
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS")
+      .fold(Runtime.getRuntime.availableProcessors)(_.toInt)
+    val spark = Session(cpus)
+    try run(spark, sfDir, SparkEntry.catalog)
+    finally spark.stop()
+  }
 
-    // one timed sample's full attribution
-    case class RunStat(time: Double, jit: Double, gc: Double, cpu: Double,
-        runq: Double, steal: Double, ccMb: Long, cached: Long,
-        dropped: Long, requeue: Boolean)
+  /** Times `queries` and prints the result line. */
+  def run(spark: SparkSession, sfDir: String, queries: Seq[Q]): Unit =
+    println(line(queries.map(q => q.name -> time(spark, sfDir, q)), sfDir))
 
+  /** Wall-clock seconds of one noop-sink run of `q`, after one untimed
+    * warm-up run at the same SF, or None when it throws. The warm-up is
+    * at the target SF because AQE picks size-dependent plans: warming
+    * at another SF compiles different code than the timed run needs. */
+  def time(spark: SparkSession, sfDir: String, q: Q): Option[Double] = {
+    // each query is self-contained: drop its cached intermediates so
+    // the timed run recomputes them and later queries get the memory
+    def once(): Unit =
+      try q.run(spark, sfDir).write.format("noop").mode("overwrite").save()
+      finally spark.catalog.clearCache()
+    System.err.println(s"[bench] start ${q.name}")
+    try {
+      once()
+      val t0 = System.nanoTime()
+      once()
+      val dt = (System.nanoTime() - t0) / 1e9
+      System.err.println(f"[bench] done  ${q.name} $dt%.2fs")
+      Some(dt)
+    } catch { case e: Throwable =>
+      System.err.println(s"[bench] ${q.name} FAILED: ${e.getMessage}")
+      None
+    }
+  }
+
+  /** `{"metric":"total","value":…,"unit":"sec","queries":{…},"errors":[…],
+    * "sf":…}`: `value` sums the queries that ran, `errors` names those
+    * that threw. When the line would exceed [[MaxLine]], `queries` keeps
+    * the most expensive entries that fit and `queries_omitted` counts the
+    * rest; `value` and `errors` always cover every query. */
+  def line(results: Seq[(String, Option[Double])], sfDir: String): String = {
     def r3(v: Double): Double = math.rint(v * 1000) / 1000
-
-    // ── crash-safe incremental scoreboard (round-16 judge ask #1b) ──
-    // The round-15 gate run was killed mid-suite (rc=124) and left NO
-    // parseable artifact. Two mitigations, both updated after EVERY
-    // completed query so a kill at any point leaves the latest state:
-    //  - a partial-scoreboard FILE (same shape as the final line plus
-    //    "partial":true and progress counters) — the repo artifact a
-    //    reader inspects after any failed run;
-    //  - a partial line on STDOUT, truncated to the driver's ~2000-char
-    //    capture window: the driver parses the LAST complete JSON line
-    //    in its tail window, so a timed-out run's capture now ends in a
-    //    parseable partial scoreboard instead of a mid-line fragment.
-    //    The final full line is printed last and therefore still wins
-    //    on a healthy run.
-    val partialPath = sys.env.getOrElse("SPARK_GRAFT_PARTIAL",
-      "/root/repo/BENCH_PARTIAL.json")
-    val lineBudget = 1900
-    def renderLine(done: Seq[(String, Double)], partial: Boolean,
-        extra: String): String = {
-      val doneTotal = r3(done.collect { case (_, v) if v >= 0 => v }.sum)
-      val errJ = done.collect { case (k, v) if v < 0 => "\"" + k + "\"" }
-        .mkString("[", ",", "]")
-      val head = if (partial)
-        s""""partial":true,"completed":${done.size},"of":${catalog.size},"""
-      else ""
-      def mk(k: Int): String = {
-        val shown = done.sortBy(-_._2).take(k)
-        val qsJ = shown.map { case (n, v) => "\"" + n + "\":" + r3(v) }
-          .mkString("{", ",", "}")
-        val omit = if (k < done.size)
-          s""","queries_omitted":${done.size - k}""" else ""
-        s"""{"metric":"total","value":$doneTotal,"unit":"sec",$head""" +
-          s""""queries":$qsJ$omit$extra,"errors":$errJ,"sf":"$sfDir"}"""
-      }
-      var k = done.size
-      while (k > 0 && mk(k).length > lineBudget) k -= 1
-      mk(k)
-    }
-    // atomic stage+move: a plain writeString truncates in place, so a
-    // reader polling the partial file mid-update would catch it empty
-    def writePartialFile(line: String): Unit =
-      try {
-        val p = java.nio.file.Paths.get(partialPath)
-        val tmp = java.nio.file.Paths.get(partialPath + ".tmp")
-        java.nio.file.Files.writeString(tmp, line + "\n")
-        java.nio.file.Files.move(tmp, p,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      } catch { case _: Throwable => () }
-    def emitPartial(done: Seq[(String, Double)]): Unit = {
-      val line = renderLine(done, partial = true, extra = "")
-      writePartialFile(line)
-      println(line); System.out.flush()
-    }
-
-    def runOne(q: graft.queries.Q, minRuns: Int,
-        requeue: Boolean): (Boolean, Vector[RunStat]) = {
-      if (warmup) {
-        try q.run(spark, sfDir).write.format("noop").mode("overwrite").save()
-        catch { case _: Throwable => () }
-        spark.catalog.clearCache()
-        // let the background C2 queue drain so the timed run neither runs
-        // interpreted nor fights compiler threads for cores (cap 30s: a
-        // 10s cap measurably let compile storms spill into timed runs)
-        var last = -1L
-        var waited = 0
-        while (waited < 120 && jit.getTotalCompilationTime != last) {
-          last = jit.getTotalCompilationTime
-          Thread.sleep(250); waited += 1
-        }
-      }
-      System.err.println(s"[bench] start ${q.name}" +
-        (if (requeue) " (requeue: in-suite time/cpu over best-known bar)"
-         else ""))
-      // Best of two timed runs: this VM shows transient multi-second CPU
-      // steal spikes; a single sample can charge one query 10× its
-      // steady-state cost. The min of two adjacent steady-state runs is
-      // the standard throughput estimator and still honest — both runs do
-      // the full computation. When the two runs disagree by >2× (the
-      // signature of a steal spike landing on one of them), a THIRD run
-      // breaks the tie — so the reported min is corroborated by at least
-      // one other same-magnitude sample whenever samples conflict.
-      var ok = true
-      var runs = Vector.empty[RunStat]
-      def timedRun(): Unit = {
-        val t0 = System.nanoTime()
-        val j0 = jit.getTotalCompilationTime
-        val g0 = gcMs
-        val c0 = processCpuNs
-        val w0 = runqWaitNs
-        val s0 = hostStealJiffies
-        val ba0 = blocksAdded.get
-        val bd0 = blocksDropped.get
-        try q.run(spark, sfDir).write.format("noop").mode("overwrite").save()
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] ${q.name} FAILED: ${e.getMessage}")
-          ok = false
-        }
-        val dt = (System.nanoTime() - t0) / 1e9
-        val dj = (jit.getTotalCompilationTime - j0) / 1e3
-        val dg = (gcMs - g0) / 1e3
-        val dc = (processCpuNs - c0) / 1e9
-        // runq sum is over LIVE threads; a thread exiting mid-run drops
-        // its accumulated wait from the end snapshot — clamp at 0
-        val dw = math.max(0L, runqWaitNs - w0) / 1e9
-        val ds = (hostStealJiffies - s0) / 100.0 // USER_HZ jiffies → sec
-        val cc = codeCacheUsedMb
-        val ba = blocksAdded.get - ba0
-        val bd = blocksDropped.get - bd0
-        System.err.println(
-          f"[bench] run${runs.size + 1}  ${q.name} $dt%.2fs (jit $dj%.1fs, " +
-            f"gc $dg%.1fs, cpu $dc%.1fs, runq $dw%.1fs, steal $ds%.1fs, " +
-            f"cc ${cc}MB, cached +$ba/-$bd)")
-        runs :+= RunStat(dt, dj, dg, dc, dw, ds, cc, ba, bd, requeue)
-        // each query is self-contained; drop its cached intermediates so
-        // storage memory never competes with later queries' execution
-        // (these drops land on the NEXT run's counter window — harmless,
-        // they are clearCache drops, not mid-run evictions)
-        spark.catalog.clearCache()
-      }
-      timedRun()
-      while (ok && runs.size < minRuns) timedRun()
-      if (ok && runs.map(_.time).max / runs.map(_.time).min > 2.0) timedRun()
-      // sub-0.5s queries always get a third sample: at that wall time
-      // a single JIT/session-placement artifact can double the best-of
-      // without tripping the 2x-disagreement tie-breaker in absolute
-      // terms (round-13's q13 — 0.203s vs 0.09s best-known was the
-      // round's only >2x entry, on a constant-size generator plan).
-      // A third run here costs tenths of a second and caps that class.
-      if (ok && runs.size < 3 && runs.map(_.time).min < 0.5) timedRun()
-      (ok, runs)
-    }
-
-    // Iterative multi-round queries synchronize on the slowest task
-    // once per round, making them the suite's steal magnets (d06's
-    // unattributed 2.6× in round 6): they always get 3 samples so a
-    // single spiked run can never be half the evidence.
-    // ...plus the round-7 driver-run inflation cluster (q08/q09/q10/
-    // q50 window queries, sub-second steady-state — a third sample is
-    // nearly free and caps a churn-spiked pair)
-    val iterative = Set("d06_dedup_clusters", "d12_cluster_canonical",
-      "q57_pagerank", "d02_minhash_lsh", "s06_kmeans_update",
-      "s07_pq_rerank", "q54_hierarchy_flatten",
-      "q08_dedup_latest", "q09_first_touch", "q10_window_funcs",
-      "q50_rfm")
-    val firstBuf = scala.collection.mutable.ArrayBuffer
-      .empty[(graft.queries.Q, Boolean, Vector[RunStat])]
-    catalog.foreach { q =>
-      val (ok, runs) = runOne(q, if (iterative(q.name)) 3 else 2,
-        requeue = false)
-      firstBuf += ((q, ok, runs))
-      emitPartial(firstBuf.toSeq.map { case (p, pok, pruns) =>
-        (p.name, if (pok) pruns.map(_.time).min else -1.0)
-      })
-    }
-    val firstPass = firstBuf.toVector
-    // end-of-suite requeue of inflated outliers (fresh cache state).
-    // Two triggers (round-9 judge ask #6): the cpu trigger (>3× best
-    // cpu and >1 s — genuine extra work or compile storms) and a
-    // WALL-TIME trigger (>1.5× best time and >0.4 s — host variance
-    // that inflates elapsed without moving cpu, e.g. steal/runq spikes
-    // under the 3× cpu bar, the q01 1.30→1.71 s swing PLANS.md:62
-    // documents). Either way the re-sample self-documents the variance
-    // in BENCH_DETAIL instead of leaving it to the judge to explain.
-    def overBar(q: graft.queries.Q, ok: Boolean,
-        runs: Vector[RunStat]): Boolean =
-      ok && hist.get(q.name).exists { case (bt, bc) =>
-        val minCpu = runs.map(_.cpu).min
-        val minTime = runs.map(_.time).min
-        (minCpu > 3 * bc && minCpu - bc > 1.0) ||
-          (minTime > 1.5 * bt && minTime - bt > 0.4)
-      }
-    // global requeue budget (round-16 judge ask #1a): on a degraded
-    // host nearly EVERY query exceeds its healthy best-known bar, the
-    // requeue pass re-runs the whole catalog, and the round-15 gate run
-    // blew the driver's timeout doing it. Mass qualification IS the
-    // host signal — when more than REQUEUE_BUDGET queries qualify, skip
-    // the pass entirely and say so: requeues exist to re-sample a FEW
-    // outliers under fresh cache state, not to re-run a suite the host
-    // has already uniformly inflated.
-    val requeueBudget = sys.env.get("SPARK_GRAFT_REQUEUE_BUDGET")
-      .flatMap(s => scala.util.Try(s.trim.toInt).toOption).getOrElse(15)
-    val overBarCount = firstPass.count { case (q, ok, runs) =>
-      overBar(q, ok, runs) }
-    val requeueEnabled = overBarCount <= requeueBudget
-    if (!requeueEnabled) {
-      val st = r3(firstPass.flatMap(_._3).map(_.steal).sum)
-      val rq = r3(firstPass.flatMap(_._3).map(_.runq).sum)
-      System.err.println(s"[bench] requeue SKIPPED: $overBarCount of " +
-        s"${firstPass.size} queries over their best-known bar (budget " +
-        s"$requeueBudget) — that is a host-degradation signature, not " +
-        s"per-query variance (suite steal ${st}s, runq ${rq}s); " +
-        "compare against BENCH_SESSION.json instead")
-    }
-    val resultsBuf = scala.collection.mutable.ArrayBuffer
-      .empty[(String, Double, Vector[RunStat])]
-    firstPass.foreach { case (q, ok, runs) =>
-      val inflated = requeueEnabled && overBar(q, ok, runs)
-      val all =
-        if (!inflated) runs
-        else {
-          System.err.println(s"[bench] requeue ${q.name}: in-suite " +
-            f"time ${runs.map(_.time).min}%.2f/cpu_s " +
-            f"${runs.map(_.cpu).min}%.1f vs best-known " +
-            f"${hist(q.name)._1}%.2f/${hist(q.name)._2}%.1f")
-          val (rok, rruns) = runOne(q, 1, requeue = true)
-          if (rok) runs ++ rruns else runs
-        }
-      val best = all.map(_.time).min
-      System.err.println(f"[bench] done  ${q.name} $best%.2fs")
-      // a failed query reports the sentinel -1, never its elapsed-until-crash
-      // (which would make a regression-into-exception look FASTER)
-      resultsBuf += ((q.name, if (ok) best else -1.0, all))
-      if (inflated)
-        emitPartial(resultsBuf.toSeq.map { case (k, v, _) => (k, v) } ++
-          firstPass.drop(resultsBuf.size).map { case (p, pok, pruns) =>
-            (p.name, if (pok) pruns.map(_.time).min else -1.0) })
-    }
-    val results = resultsBuf.toVector
-    // stdout budget: the driver's capture truncated round 3's tail, so the
-    // final printed line stays minimal — 3-decimal times, no per-run detail.
-    // Full attribution (every run's time/jit_s/gc_s) goes to a sidecar
-    // file the judge reads from the repo instead.
-    val qs = results.map { case (k, v, _) => "\"" + k + "\":" + r3(v) }
-      .mkString("{", ",", "}")
-    val errors = results.collect { case (k, v, _) if v < 0 => "\"" + k + "\"" }
+    val timed = results.collect { case (n, Some(t)) => (n, t) }.sortBy(-_._2)
+    val total = r3(timed.map(_._2).sum)
+    val errors = results.collect { case (n, None) => Json.str(n) }
       .mkString("[", ",", "]")
-    val total = r3(results.map(_._2).filter(_ >= 0).sum)
-    // host-conditions sums, computed BEFORE the best-file rewrite so
-    // the stale re-baseline below can consult them (round-11 review):
-    // a degraded-host run must never become the new table-wide bar
-    val stealSumD = results.flatMap(_._3).map(_.steal).sum
-    val runqSumD = results.flatMap(_._3).map(_.runq).sum
-    val hostHealthy = stealSumD + runqSumD < 120.0
-    if (!hostHealthy)
-      System.err.println(f"[bench] host NOT healthy (steal " +
-        f"$stealSumD%.1f s + runq $runqSumD%.1f s) — stale best-known " +
-        "entries keep their old values this run")
-    val bestJson = results.map { case (k, v, runs) =>
-      val (ht, hc) = hist.getOrElse(k, (Double.MaxValue, Double.MaxValue))
-      val hr = histRound.getOrElse(k, 0)
-      val okCpu = if (v >= 0) runs.map(_.cpu).min else Double.MaxValue
-      // stale best (set >2 rounds ago under a different host regime):
-      // replace with this run's fresh sample instead of min-ing against
-      // a bar no current run can meet — keeps the requeue trigger
-      // honest. Only from a HEALTHY run: re-baselining from a churn-
-      // inflated run would silence the requeue table-wide.
-      val stale = hostHealthy &&
-        roundNow.exists(r => hist.contains(k) && r - hr > 2)
-      val (nt, nc, nr) =
-        if (v < 0) (ht, hc, hr)
-        else if (stale) (v, okCpu, roundNow.get)
-        else (math.min(ht, v), math.min(hc, okCpu),
-          if (v < ht || okCpu < hc) roundNow.getOrElse(hr) else hr)
-      if (nt == Double.MaxValue) None
-      else Some("\"" + k + "\":" +
-        s"""{"time":${r3(nt)},"cpu_s":${r3(nc)},"round":$nr}""")
-    }.flatten.mkString("{", ",", "}")
-    val detail = results.map { case (k, _, runs) =>
-      "\"" + k + "\":[" + runs.map { r =>
-        s"""{"time":${r3(r.time)},"jit_s":${r3(r.jit)},""" +
-          s""""gc_s":${r3(r.gc)},"cpu_s":${r3(r.cpu)},""" +
-          s""""runq_s":${r3(r.runq)},"host_steal_s":${r3(r.steal)},""" +
-          s""""code_cache_mb":${r.ccMb},"cached_blocks":${r.cached},""" +
-          s""""dropped_blocks":${r.dropped},"requeue":${r.requeue}}"""
-      }.mkString(",") + "]"
-    }.mkString("{\"sf\":\"" + sfDir + "\",\"best_known\":" + bestJson +
-      ",\"runs\":{", ",", "}}")
-    val detailPath = sys.env.getOrElse("SPARK_GRAFT_DETAIL",
-      "/root/repo/BENCH_DETAIL.json")
-    try java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(detailPath), detail)
-    catch { case e: Throwable =>
-      System.err.println(s"[bench] detail write failed: ${e.getMessage}")
+    def render(k: Int): String = {
+      val qs = timed.take(k).map { case (n, t) => s"${Json.str(n)}:${r3(t)}" }
+        .mkString("{", ",", "}")
+      val omitted =
+        if (k < timed.size) s""","queries_omitted":${timed.size - k}""" else ""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs""" +
+        s"""$omitted,"errors":$errors,"sf":${Json.str(sfDir)}}"""
     }
-    // refresh the committed bests with anything this run improved (only
-    // meaningful on the builder's machine — the driver's copy is
-    // ephemeral). Never from a SPARK_GRAFT_ONLY-filtered run (it would
-    // truncate the map to the filter) and only at the canonical sf0.1.
-    if (sfDir.endsWith("sf0.1") && only.isEmpty)
-      try java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(bestPath), bestJson)
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] best write failed: ${e.getMessage}")
-      }
-    // BEST-OF-SESSION scoreboard (round-15): merge this run's
-    // per-query results into SPARK_GRAFT_SESSION (min per query
-    // across the session's full-catalog runs, total recomputed), so a
-    // gate run landing on a badly contended host carries an explicit
-    // healthy regression operand alongside it — the round-14 gate ran
-    // under 212 s of hypervisor steal and every per-query comparison
-    // needed BENCH_DETAIL forensics. Same scoreboard shape as the
-    // printed line; a fresh session starts by removing the file.
-    if (sfDir.endsWith("sf0.1") && only.isEmpty) {
-      val sessionPath = sys.env.getOrElse("SPARK_GRAFT_SESSION",
-        "/root/repo/BENCH_SESSION.json")
-      try {
-        val qRe = "\"([A-Za-z0-9_]+)\":(-?[0-9.eE+]+)".r
-        val prevTxt = scala.util.Try(new String(
-          java.nio.file.Files.readAllBytes(
-            java.nio.file.Paths.get(sessionPath)), "UTF-8"))
-          .getOrElse("")
-        val prevQ = {
-          val s = prevTxt.indexOf("\"queries\":{")
-          val e = if (s < 0) -1 else prevTxt.indexOf("}", s)
-          if (s < 0 || e < 0) Map.empty[String, Double]
-          else qRe.findAllMatchIn(prevTxt.substring(s, e + 1))
-            .map(m => m.group(1) -> m.group(2).toDouble).toMap
-        }
-        val prevRuns = "\"runs\":([0-9]+)".r
-          .findFirstMatchIn(prevTxt).map(_.group(1).toInt).getOrElse(0)
-        val merged = results.map { case (k, v, _) =>
-          k -> (Seq(v).filter(_ >= 0) ++ prevQ.get(k).filter(_ >= 0))
-            .reduceOption(_ min _).getOrElse(-1.0)
-        }
-        val mTotal = r3(merged.collect { case (_, v) if v >= 0 => v }.sum)
-        val mErr = merged.collect { case (k, v) if v < 0 =>
-          "\"" + k + "\"" }.mkString("[", ",", "]")
-        val mq = merged.sortBy { case (_, v) => -v }
-          .map { case (k, v) => "\"" + k + "\":" + r3(v) }
-          .mkString("{", ",", "}")
-        java.nio.file.Files.writeString(
-          java.nio.file.Paths.get(sessionPath),
-          s"""{"metric":"total","value":$mTotal,"unit":"sec",""" +
-            s""""queries":$mq,"errors":$mErr,""" +
-            s""""runs":${prevRuns + 1},"sf":"$sfDir"}""")
-      } catch { case e: Throwable =>
-        System.err.println(
-          s"[bench] session write failed: ${e.getMessage}")
-      }
-    }
-    // The driver's capture keeps only the LAST ~2000 chars of stdout and
-    // parses the JSON line out of that window — BENCH_r01–r03 all landed
-    // "parsed": null because the full per-query map outgrew it, leaving
-    // the judge a mid-line tail. A line that does not fit ENTIRELY in
-    // the window is a line the driver cannot parse at all, so: print the
-    // full map when it fits, else the most expensive queries that do
-    // (the entries a reader acts on), with an explicit omission count
-    // and a pointer to the complete sidecar. `value` and `errors`
-    // always cover the whole catalog either way.
-    // host-conditions index (round-10 judge ask #3): the scoreboard line
-    // self-documents a degraded host instead of leaving it to BENCH_DETAIL
-    // forensics — Σ hypervisor steal and Σ run-queue wait over every timed
-    // sample, plus the median per-query inflation of this run's reported
-    // time vs the committed best-known (≈1.0 on a clean host; a UNIFORM
-    // >1.1 with large steal/runq sums reads "host churn", not "code").
-    val stealSum = r3(stealSumD)
-    val runqSum = r3(runqSumD)
-    val inflations = results
-      .collect { case (k, v, _) if v > 0 && hist.contains(k) =>
-        v / hist(k)._1 }
-      .sorted
-    val medianInfl = r3(
-      if (inflations.isEmpty) 1.0
-      else if (inflations.size % 2 == 1) inflations(inflations.size / 2)
-      else (inflations(inflations.size / 2 - 1) +
-        inflations(inflations.size / 2)) / 2)
-    val hostJson = s""""host":{"steal_s":$stealSum,"runq_s":$runqSum,""" +
-      s""""median_inflation":$medianInfl}"""
-    val budget = 1900
-    def mkLine(qsJson: String, extra: String) =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qsJson$extra,"errors":$errors,$hostJson,"sf":"$sfDir"}"""
-    val full = mkLine(qs, "")
-    val out =
-      if (full.length <= budget) full
-      else {
-        val sorted = results.sortBy(-_._2)
-        def mk(k: Int) = {
-          val qsJ = sorted.take(k)
-            .map { case (name, v, _) => "\"" + name + "\":" + r3(v) }
-            .mkString("{", ",", "}")
-          mkLine(qsJ, s""","queries_omitted":${results.size - k}""" +
-            s""","detail":"$detailPath"""")
-        }
-        var k = sorted.size
-        while (k > 0 && mk(k).length > budget) k -= 1
-        mk(k)
-      }
-    println(out)
-    // a completed run replaces the incremental file with the final line,
-    // so BENCH_PARTIAL.json saying "partial":true always means a kill
-    writePartialFile(out)
-    spark.stop()
+    (timed.size to 0 by -1).iterator.map(render)
+      .find(_.length <= MaxLine).getOrElse(render(0))
   }
 }

@@ -8,8 +8,8 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Li
 /** Session extension registering graft's native expressions for SQL use:
   *
   * {{{
-  * SparkSession.builder().withExtensions(new GraftExtensions)...
-  *   // or spark.sql config: spark.sql.extensions=graft.plans.GraftExtensions
+  * val spark = graft.Session(cores)
+  *   // sets spark.sql.extensions=graft.plans.GraftExtensions
   * spark.sql("SELECT dot_product(a.embedding, b.embedding) FROM ...")
   * }}}
   *

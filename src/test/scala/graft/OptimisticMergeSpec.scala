@@ -36,10 +36,11 @@ class OptimisticMergeSpec extends AnyFunSuite {
   private def rows(t: String): Set[(Long, String, String)] =
     PS.read(spark, t).as[(Long, String, String)].collect().toSet
 
-  private def awaitFile(path: String): Unit = {
+  private def awaitFile(path: String, present: Boolean = true): Unit = {
     val deadline = System.currentTimeMillis() + 60000
-    while (!Files.exists(Paths.get(path))) {
-      assert(System.currentTimeMillis() < deadline, s"never appeared: $path")
+    while (Files.exists(Paths.get(path)) != present) {
+      assert(System.currentTimeMillis() < deadline,
+        s"never ${if (present) "appeared" else "went away"}: $path")
       Thread.sleep(20)
     }
   }
@@ -349,6 +350,10 @@ class OptimisticMergeSpec extends AnyFunSuite {
       }
     })
     awaitFile(s"$t/_snapshots/v00002/.reserved")
+    // the preparer reserves under the table lock and frees it before
+    // evaluating the gated source; ALTER (which does not wait for a held
+    // lock) must land after that, not in the reservation's window
+    awaitFile(s"$t.__lock", present = false)
     PS.addColumn(spark, t, "x",
       org.apache.spark.sql.types.IntegerType)
     OptimisticMergeGates.schemaGate.countDown()

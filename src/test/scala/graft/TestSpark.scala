@@ -4,23 +4,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** One shared local session for the whole test run. */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      // the production wiring: native SQL functions + the snapshot
-      // MERGE INTO resolution rule
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // keep catalog-table tests (S8-S10) out of the repo working tree
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh").toString)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  // the production configuration; the warehouse dir keeps catalog-table
+  // tests (S8-S10) out of the repo working tree
+  lazy val spark: SparkSession = Session(4,
+    Some(java.nio.file.Files.createTempDirectory("graft_wh").toString))
 
   def rows(df: DataFrame): Set[Seq[Any]] =
     df.collect().map(_.toSeq).toSet

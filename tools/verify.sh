@@ -12,9 +12,6 @@ rm -rf "$OUT"
   --master "local[${SPARK_GRAFT_CPUS:-8}]" \
   --driver-memory 8g \
   --conf "spark.driver.extraJavaOptions=-XX:ReservedCodeCacheSize=1g" \
-  --conf spark.sql.session.timeZone=UTC \
-  --conf spark.ui.enabled=false \
-  --conf spark.sql.shuffle.partitions=${SPARK_GRAFT_CPUS:-8} \
   --class graft.Verify "$JAR" "$SF" "$OUT" "${2:-}" 2> /tmp/verify_stderr.log \
   || { tail -40 /tmp/verify_stderr.log; exit 1; }
 grep '\[verify\]' /tmp/verify_stderr.log || true
