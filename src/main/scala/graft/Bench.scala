@@ -20,9 +20,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.get("SPARK_GRAFT_CPUS")
-      .fold(Runtime.getRuntime.availableProcessors)(_.toInt)
-    val spark = Session(cpus)
+    val spark = Session(Session.cores)
     try run(spark, sfDir, SparkEntry.catalog)
     finally spark.stop()
   }

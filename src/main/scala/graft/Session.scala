@@ -5,6 +5,12 @@ import org.apache.spark.sql.SparkSession
 /** The engine configuration. Every graft main and the test suite build
   * their session here, so the settings below hold wherever graft runs. */
 object Session {
+  /** Local cores for a graft main: `SPARK_GRAFT_CPUS`, else every core
+    * of the machine. The launcher's `--master` is ignored — the
+    * builder's master below wins. */
+  def cores: Int = sys.env.get("SPARK_GRAFT_CPUS")
+    .fold(Runtime.getRuntime.availableProcessors)(_.toInt)
+
   def apply(cores: Int, warehouseDir: Option[String] = None): SparkSession = {
     val b = SparkSession.builder()
       .master(s"local[$cores]")

@@ -11,7 +11,7 @@ object Verify {
       case Array(s, o, p) => (s, o, p)
     }
     // engine configuration (codegen limits, split size): see graft.Session
-    val spark = Session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
+    val spark = Session(Session.cores)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(_._1.startsWith(only)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")

@@ -22,10 +22,11 @@ import org.apache.spark.sql.functions.{broadcast, col, lit, regexp_extract, when
   * <table>/_current                         committed version pointer
   * }}}
   *
-  * Commit protocol is identical to Snapshots (full data write, then
-  * manifest, then atomic pointer flip through the [[CommitStore]] seam;
-  * writers serialize through the single-writer lock; crashed writers
-  * leave invisible orphans that vacuum reclaims), so every reader —
+  * Commit protocol follows Snapshots (full data write, then manifest,
+  * then atomic pointer flip through the [[CommitStore]] seam; crashed
+  * writers leave invisible orphans that vacuum reclaims), except that
+  * DML writers prepare their data outside the single-writer lock and
+  * hold it only to validate and flip (see [[upsert]]), so every reader —
   * current or pinned — sees a complete, immutable version and never torn
   * state, while an upsert's data cost is O(touched partitions).
   *
@@ -233,11 +234,8 @@ object PartitionedSnapshots {
   def setStatsAutoLimit(t: String, n: Int,
       store: CommitStore = CommitStore.local): Unit = {
     require(n >= 0, s"stats_num_cols must be >= 0, got $n")
-    Incremental.spinOnContention() {
-      Incremental.withLock(t, Incremental.DefaultLockStaleMs, store) {
-        updateProps(t, Map("stats_num_cols" -> n.toString),
-          store = store)
-      }
+    withCommitLock(t, store) {
+      updateProps(t, Map("stats_num_cols" -> n.toString), store = store)
     }
   }
 
@@ -277,18 +275,16 @@ object PartitionedSnapshots {
     * simply records nothing for them (fail-safe KEEP). */
   def setStatsColumns(t: String, cols: Seq[String],
       store: CommitStore = CommitStore.local): Unit =
-    Incremental.spinOnContention() {
-      Incremental.withLock(t, Incremental.DefaultLockStaleMs, store) {
-        if (cols.map(_.trim).filter(_.nonEmpty) == Seq("auto"))
-          updateProps(t, Map.empty, remove = Seq("zonemap_cols"),
-            store = store)
-        else if (cols.forall(_.trim.isEmpty))
-          updateProps(t, Map("zonemap_cols" -> StatsOffSentinel),
-            store = store)
-        else
-          updateProps(t, Map("zonemap_cols" -> cols.mkString(",")),
-            store = store)
-      }
+    withCommitLock(t, store) {
+      if (cols.map(_.trim).filter(_.nonEmpty) == Seq("auto"))
+        updateProps(t, Map.empty, remove = Seq("zonemap_cols"),
+          store = store)
+      else if (cols.forall(_.trim.isEmpty))
+        updateProps(t, Map("zonemap_cols" -> StatsOffSentinel),
+          store = store)
+      else
+        updateProps(t, Map("zonemap_cols" -> cols.mkString(",")),
+          store = store)
     }
 
   /** BACKFILL the commit-recorded per-file stats for files that
@@ -392,17 +388,15 @@ object PartitionedSnapshots {
       if (gained == 0) return 0
       val byPart = (enriched ++ fine).groupBy(_.part)
       // ── the SHORT critical section: re-validate + atomic rewrite ─
-      val committed = Incremental.spinOnContention() {
-        Incremental.withLock(t, Incremental.DefaultLockStaleMs, store) {
-          if (!currentVersion(t, store).contains(cur)) false
-          else {
-            // atomicWrite (via atomic=true): this rewrites the
-            // sidecar of an ALREADY-COMMITTED version, where no
-            // write ordering protects against a torn file
-            writeFileMeta(t, cur, m, None, store, fresh = byPart,
-              atomic = true)
-            true
-          }
+      val committed = withCommitLock(t, store) {
+        if (!currentVersion(t, store).contains(cur)) false
+        else {
+          // atomicWrite (via atomic=true): this rewrites the
+          // sidecar of an ALREADY-COMMITTED version, where no
+          // write ordering protects against a torn file
+          writeFileMeta(t, cur, m, None, store, fresh = byPart,
+            atomic = true)
+          true
         }
       }
       if (committed) return gained
@@ -514,10 +508,10 @@ object PartitionedSnapshots {
         .orElse(carried.get(p).filter(_.forall(_.owner == o)))
         .getOrElse {
           // fallback listing has no row counts; enrich the owners the
-          // caller names (serializing commits pass the version they
-          // just wrote — footer reads of files this writer created;
-          // the backfill passes everything, its documented pay-once
-          // cost) so pre-rowcount gaps don't poison rowCountOf forever
+          // caller names (`write` passes the version it just wrote —
+          // footer reads of files this writer created; the backfill
+          // passes everything, its documented pay-once cost) so
+          // pre-rowcount gaps don't poison rowCountOf forever
           val listed = listPartFiles(t, o, p, store)
           if (enrichRows(o)) withRowCounts(t, listed, store) else listed
         }
@@ -673,11 +667,10 @@ object PartitionedSnapshots {
     // the migration tool's documented cost class.
     var freshPrev: Option[Long] = None
     committed.foreach { v =>
-      // spinOnContention: the per-version lock take must outwait a
+      // withCommitLock: the per-version lock take must outwait a
       // concurrent writer's transient (ms-scale) commit section
       // rather than abort the whole migration on the first collision
-      Incremental.spinOnContention() {
-      Incremental.withLock(t, Incremental.DefaultLockStaleMs, store) {
+      withCommitLock(t, store) {
         if (hasManifest(t, v, store)) {
           val m = manifest(t, v, store)
           // a pre-horizon version kept only as a DATA OWNER — vacuum
@@ -723,7 +716,6 @@ object PartitionedSnapshots {
           } else freshPrev = None
           }
         }
-      }
       }
     }
     indexed.reverse
@@ -886,7 +878,7 @@ object PartitionedSnapshots {
     * normal commit path. Refuses over an existing committed table. */
   def initTable(t: String, partCol: String, schemaJson: String,
       store: CommitStore = CommitStore.local): Unit =
-    Incremental.withLock(t, Incremental.DefaultLockStaleMs, store) {
+    withCommitLock(t, store) {
       if (currentVersion(t, store).isDefined)
         throw new IllegalStateException(
           s"$t already has committed data — cannot re-declare it")
@@ -911,7 +903,7 @@ object PartitionedSnapshots {
       dataType: org.apache.spark.sql.types.DataType,
       store: CommitStore = CommitStore.local): Unit = {
     import org.apache.spark.sql.types.{StructField, StructType}
-    Incremental.withLock(t, Incremental.DefaultLockStaleMs, store) {
+    withCommitLock(t, store) {
       // base = what a reader sees today: the current version's file
       // schema (mergeSchema union across evolved footers), widened by
       // any declared-only columns from a previous CREATE/ALTER
@@ -962,14 +954,14 @@ object PartitionedSnapshots {
     * `createNew` on the `.reserved` marker admits exactly one owner
     * per number; losers step to the next.
     *
-    * INVARIANT: every call site holds the table lock (legacy writers
-    * reserve inside their own `withLock`; `optimisticAttempt` takes
-    * `withCommitLock` for its reserve+mark step), so a vacuum — which
-    * also holds it — can never interleave with the mkdirs→createNew
-    * window. The arbiter still matters: two optimistic preparers'
-    * reserve sections serialize but both read `versions()` states
-    * that may already contain each other's fresh dirs, and createNew
-    * is what makes the pick exact. The IOException retry below is
+    * INVARIANT: every call site holds the table lock (`write` and
+    * `restore` reserve inside their own `withLock`; `commitAttempt`
+    * takes `withCommitLock` for its reserve+mark step unless its caller
+    * holds the lock), so a vacuum — which also holds it — can never
+    * interleave with the mkdirs→createNew window. The arbiter still
+    * matters: two optimistic preparers' reserve sections serialize
+    * but both read `versions()` states that may already contain each
+    * other's fresh dirs, and createNew is what makes the pick exact. The IOException retry below is
     * defense in depth for bindings whose failures are visible only at
     * the claim. */
   private def reserveVersion(t: String, store: CommitStore): Long = {
@@ -1040,9 +1032,9 @@ object PartitionedSnapshots {
   def append(spark: SparkSession, t: String, rows: DataFrame,
       partCol: String, optimizeWrite: Boolean = false,
       store: CommitStore = CommitStore.local,
-      txn: Option[String] = None): Long =
-    upsertImpl(spark, t, rows, Nil, partCol, optimizeWrite,
-      publish = true, store, txn)
+      txn: Option[String] = None, maxRetries: Int = 3): Long =
+    upsert(spark, t, rows, Nil, partCol, optimizeWrite, store, txn,
+      maxRetries)
 
   /** Keyed delete+insert upsert as a new version: ONLY the partitions
     * carrying update rows are read, merged, and rewritten — every other
@@ -1056,68 +1048,21 @@ object PartitionedSnapshots {
     * cured by [[compact]] later (Delta's optimized-write trade: one
     * extra shuffle of the touched rows per commit buys a scan-friendly
     * layout; leave it off for latency-critical streaming commits and
-    * compact on a schedule instead). */
-  def upsert(spark: SparkSession, t: String, updates: DataFrame,
-      keys: Seq[String], partCol: String,
-      optimizeWrite: Boolean = false,
-      store: CommitStore = CommitStore.local,
-      txn: Option[String] = None): Long =
-    upsertImpl(spark, t, updates, keys, partCol, optimizeWrite,
-      publish = true, store, txn)
-
-  /** WRITE-AUDIT-PUBLISH, stage half: the upsert's data and manifest
-    * land as a fully-formed version but the pointer does NOT flip —
-    * readers stay on the old version while audits (row counts, Quality
-    * checks, reconciliation) run against `readVersion(staged)`. Flip
-    * with [[publish]] when the audit passes; abandon by doing nothing
-    * (vacuum reclaims unpublished versions above the pointer as
-    * orphans — which also means: do NOT run vacuum between stage and
-    * publish). */
-  def stageUpsert(spark: SparkSession, t: String, updates: DataFrame,
-      keys: Seq[String], partCol: String,
-      optimizeWrite: Boolean = false,
-      store: CommitStore = CommitStore.local): Long =
-    upsertImpl(spark, t, updates, keys, partCol, optimizeWrite,
-      publish = false, store)
-
-  /** WRITE-AUDIT-PUBLISH, publish half: flip the pointer to a STAGED
-    * version after its audit passed. Refuses to move backwards (use
-    * [[restore]] for rollback — it preserves linear history). */
-  def publish(t: String, v: Long,
-      store: CommitStore = CommitStore.local): Unit =
-    Incremental.withLock(t, Incremental.DefaultLockStaleMs, store) {
-      // manifest-FILE existence, not emptiness: an empty staged batch
-      // is a legitimate version (same hasManifest rule as every other
-      // dispatch site)
-      if (!hasManifest(t, v, store)) throw new IllegalStateException(
-        s"$t has no staged snapshot v$v (vacuumed or never staged)")
-      val cur = currentVersion(t, store)
-      if (cur.exists(_ >= v)) throw new IllegalStateException(
-        s"$t is already at v${cur.get} >= staged v$v — publish only " +
-          "moves forward; use restore for rollback")
-      commitPointer(t, v, store)
-    }
-
-  /** OPTIMISTIC concurrent APPEND (no keyed dedup) — see
-    * [[optimisticUpsert]]. */
-  def optimisticAppend(spark: SparkSession, t: String, rows: DataFrame,
-      partCol: String, optimizeWrite: Boolean = false,
-      maxRetries: Int = 3, store: CommitStore = CommitStore.local,
-      txn: Option[String] = None): Long =
-    optimisticUpsert(spark, t, rows, Nil, partCol, optimizeWrite,
-      maxRetries, store, txn)
-
-  /** OPTIMISTIC concurrent upsert — the Delta/Iceberg commit
-    * discipline, so writers touching DISJOINT partitions of one table
-    * do NOT serialize their data writes on the single-writer lock:
+    * compact on a schedule instead).
+    *
+    * Every DML writer of this format ([[upsert]], [[append]],
+    * [[merge]], [[delete]], [[updateWhere]], [[compact]]) commits
+    * through ONE protocol, the Delta/Iceberg optimistic discipline, so
+    * writers touching DISJOINT partitions of one table do NOT
+    * serialize their data writes on the single-writer lock:
     *
     *  1. PREPARE (lock-free): read the BASE version's touched
-    *     partitions, merge (keyed delete+insert, same semantics as
-    *     [[upsert]]), and write the result into a freshly RESERVED
-    *     version dir ([[reserveVersion]]'s create-if-absent arbiter
-    *     makes the number allocation safe without the lock). A
-    *     heartbeated `.inflight` marker tells [[vacuum]] the dir is a
-    *     live preparation, not a crashed writer's orphan.
+    *     partitions, merge (here keyed delete+insert), and write the
+    *     result into a freshly RESERVED version dir
+    *     ([[reserveVersion]]'s create-if-absent arbiter makes the
+    *     number allocation exact). A heartbeated `.inflight` marker
+    *     tells [[vacuum]] the dir is a live preparation, not a crashed
+    *     writer's orphan.
     *  2. VALIDATE + COMMIT (a SHORT critical section under the table
     *     lock — milliseconds of metadata, never data): re-read the
     *     CURRENT manifest, diff it against the base manifest, and
@@ -1140,11 +1085,11 @@ object PartitionedSnapshots {
     *     refuses with [[Incremental.ConcurrentWriteException]] naming
     *     the conflicting partitions and the versions that took them.
     *
-    * Serializability: a committed optimistic upsert is byte-equivalent
-    * to the same [[upsert]] run serially at its commit point — the
-    * validation guarantees the touched partitions' content is exactly
-    * what the prepare read, and every untouched partition's entry comes
-    * from the manifest current AT COMMIT. Crash at any step leaves a
+    * Serializability: a committed upsert is byte-equivalent to the
+    * same upsert run alone at its commit point — the validation
+    * guarantees the touched partitions' content is exactly what the
+    * prepare read, and every untouched partition's entry comes from
+    * the manifest current AT COMMIT. Crash at any step leaves a
     * readable table: before the pointer flip the prepared dir is
     * invisible (vacuum reclaims it once its `.inflight` beats go
     * stale).
@@ -1152,234 +1097,124 @@ object PartitionedSnapshots {
     * Conflict granularity is the PARTITION — the rewrite unit of this
     * format. Key-disjoint writers to the same partition are handled by
     * retry (re-merge), not parallel commit; partition-disjoint writers
-    * never retry. Use the plain [[upsert]]/[[merge]] path for
-    * maintenance jobs that must not lose a race — the lock serializes
-    * those with everything; [[optimisticCompact]]/[[optimisticDelete]]
-    * are the concurrency-first variants of the maintenance writers.
+    * never retry.
     *
     * At 100 TB: prepare cost is O(touched partitions) of data per
     * writer, fully parallel across writers; the serialized section is
     * one manifest read + diff + one manifest write + pointer flip —
     * metadata-sized, independent of data volume. */
-  def optimisticUpsert(spark: SparkSession, t: String,
-      updates: DataFrame, keys: Seq[String], partCol: String,
-      optimizeWrite: Boolean = false, maxRetries: Int = 3,
-      store: CommitStore = CommitStore.local,
-      txn: Option[String] = None): Long =
-    optimisticLoop(t, maxRetries) { () =>
-      optimisticAttempt(spark, t, updates, partCol, keys, store, txn,
-        requireBase = false, dropEmptied = false,
-        resolve = (updCached, touchedDirs, mBase, _) => {
-          val existingDirs = mBase.collect {
-            case (p, owner) if touchedDirs(p) =>
-              s"${dataDir(t, owner)}/$p"
-          }.toSeq
-          val merged =
-            if (existingDirs.isEmpty) updCached
-            else {
-              val existing = spark.read.option("mergeSchema", "true")
-                .parquet(existingDirs: _*)
-              val kept =
-                if (keys.isEmpty) existing
-                else existing.join(
-                  updCached.select(keys.map(col): _*).distinct(),
-                  keys, "left_anti")
-              kept.unionByName(updCached, allowMissingColumns = true)
-            }
-          if (optimizeWrite) merged.repartition(col(partCol)) else merged
-        },
-        checkParts = (parts, touchedDirs, mBase) => {
-          val unmerged =
-            parts.filter(p => mBase.contains(p) && !touchedDirs(p))
-          if (unmerged.nonEmpty)
-            throw new IllegalStateException(
-              "partition rendering mismatch: wrote " +
-                unmerged.mkString(", ") + " without merging its " +
-                "existing rows — partCol type unsupported for " +
-                "manifest addressing (use string/date/integral keys)")
-        })
-    }
-
-  /** OPTIMISTIC concurrent MERGE — [[merge]] semantics (conditional
-    * update/delete/insert clauses over [[target]]/[[source]] refs,
-    * optional schema evolution) committed through the same
-    * prepare/validate protocol as [[optimisticUpsert]], so a MERGE
-    * writer and any other optimistic writer touching DISJOINT
-    * partitions do not serialize their data writes on the table lock.
-    *
-    * The conflict rule is identical: any partition this merge reads or
-    * writes (the source's addressed partitions plus everything the
-    * resolved output lands in) that changed owner since the base
-    * version refuses the attempt, and a bounded retry re-resolves the
-    * clauses against the new current version — so a lost race re-reads
-    * the winner's rows before matching, never matches against stale
-    * data. A merge whose matched-DELETE clause empties a partition
-    * commits the removal: the partition's manifest entry drops, exactly
-    * as the serializing [[merge]] records it.
-    *
-    * Use the locking [[merge]] for maintenance writers that must not
-    * lose a race (GDPR deletes, backfills racing compaction): the lock
-    * serializes those with everything, while this path trades bounded
-    * retries for concurrency. */
-  def optimisticMerge(spark: SparkSession, t: String, src: DataFrame,
+  def upsert(spark: SparkSession, t: String, updates: DataFrame,
       keys: Seq[String], partCol: String,
-      whenMatchedUpdate: Map[String, org.apache.spark.sql.Column] = Map.empty,
-      whenMatchedDelete: Option[org.apache.spark.sql.Column] = None,
-      insertNotMatched: Boolean = true,
-      insertCond: Option[org.apache.spark.sql.Column] = None,
-      evolveSchema: Boolean = false, maxRetries: Int = 3,
+      optimizeWrite: Boolean = false,
       store: CommitStore = CommitStore.local,
-      txn: Option[String] = None): Long =
-    optimisticLoop(t, maxRetries) { () =>
-      optimisticAttempt(spark, t, src, partCol, keys, store, txn,
-        requireBase = true, dropEmptied = true,
-        resolve = (srcCached, touchedDirs, mBase, base) => {
-          // pin the schema source to the BASE version: under the lock,
-          // merge() reads "current", but a lock-free prepare must
-          // resolve against the exact state its validation will verify.
-          // Deliberately re-derived on EVERY retry attempt (not cached
-          // across races): a concurrent evolveSchema merge can widen
-          // the table between attempts, and the re-resolve must see
-          // the new base's columns. On an indexed table the schema
-          // comes from planMeta (metadata-only); the legacy listing
-          // cost only arises on pre-feature tables, bounded by
-          // maxRetries.
-          val full = readVersion(spark, t, base.get, store)
-          val existingDirs = mBase.collect {
-            case (p, o) if touchedDirs(p) => s"${dataDir(t, o)}/$p"
-          }.toSeq
-          val targetCols0 = full.columns.toSeq
-          val tgt0 =
-            if (existingDirs.isEmpty) full.limit(0)
-            else spark.read.option("mergeSchema", "true")
+      txn: Option[String] = None, maxRetries: Int = 3): Long =
+    commitLoop(t, maxRetries) { () =>
+      upsertAttempt(spark, t, updates, keys, partCol, optimizeWrite,
+        store, txn)
+    }
+
+  /** WRITE-AUDIT-PUBLISH, stage half: the upsert's data and manifest
+    * land as a fully-formed version but the pointer does NOT flip —
+    * readers stay on the old version while audits (row counts, Quality
+    * checks, reconciliation) run against `readVersion(staged)`. Flip
+    * with [[publish]] when the audit passes; abandon by doing nothing
+    * (vacuum reclaims unpublished versions above the pointer as
+    * orphans — which also means: do NOT run vacuum between stage and
+    * publish). */
+  def stageUpsert(spark: SparkSession, t: String, updates: DataFrame,
+      keys: Seq[String], partCol: String,
+      optimizeWrite: Boolean = false,
+      store: CommitStore = CommitStore.local): Long =
+    underLock(t, store) {
+      upsertAttempt(spark, t, updates, keys, partCol, optimizeWrite,
+        store, None, lockHeld = true, publish = false)
+    }
+
+  /** [[upsert]] (with no `keys`, [[append]]) as ONE attempt under the
+    * table lock, which cannot lose a race: the streaming sink's last
+    * resort for an epoch whose commit ran out of retries, so a
+    * long-running query always makes progress. Like every lock taker
+    * it fails at once on a held lock; the sink queues it. */
+  private[graft] def upsertUnderLock(spark: SparkSession, t: String,
+      updates: DataFrame, keys: Seq[String], partCol: String,
+      store: CommitStore, txn: Option[String]): Long =
+    underLock(t, store) {
+      upsertAttempt(spark, t, updates, keys, partCol,
+        optimizeWrite = false, store, txn, lockHeld = true)
+    }
+
+  /** One attempt run while holding the table lock for all of it: no
+    * other writer commits in between, so the attempt cannot
+    * conflict. */
+  private def underLock(t: String, store: CommitStore)(
+      attempt: => Either[String, Long]): Long =
+    Incremental.withLock(t, Incremental.DefaultLockStaleMs, store) {
+      attempt.fold(c => throw new IllegalStateException(
+        s"$t: conflict while holding the table lock: $c"), identity)
+    }
+
+  private def upsertAttempt(spark: SparkSession, t: String,
+      updates: DataFrame, keys: Seq[String], partCol: String,
+      optimizeWrite: Boolean, store: CommitStore, txn: Option[String],
+      lockHeld: Boolean = false,
+      publish: Boolean = true): Either[String, Long] =
+    commitAttempt(spark, t, updates, partCol, keys, store, txn,
+      requireBase = false, dropEmptied = false,
+      resolve = (updCached, touchedDirs, mBase, _) => {
+        val existingDirs = ownerDirs(t, mBase, touchedDirs)
+        // empty `keys` = append semantics: keep every existing row
+        val merged =
+          if (existingDirs.isEmpty) updCached
+          else {
+            val existing = spark.read.option("mergeSchema", "true")
               .parquet(existingDirs: _*)
-          val newCols =
-            if (evolveSchema)
-              srcCached.columns.toSeq.filterNot(targetCols0.contains)
-            else Nil
-          val targetCols = targetCols0 ++ newCols
-          val tgt = targetCols.foldLeft(tgt0)((d, c) =>
-            if (d.columns.contains(c)) d
-            else d.withColumn(c, lit(null).cast(
-              if (newCols.contains(c)) srcCached.schema(c).dataType
-              else full.schema(c).dataType)))
-          MergeClauses.resolve(tgt, srcCached, keys, targetCols,
-            whenMatchedUpdate, whenMatchedDelete, insertNotMatched,
-            insertCond)
-        },
-        checkParts = (parts, touchedDirs, _) => {
-          val unexpected = parts.filterNot(touchedDirs)
-          if (unexpected.nonEmpty)
-            throw new IllegalStateException(
-              "partition rendering mismatch during merge: wrote " +
-                unexpected.mkString(", ") + " outside the source's " +
-                "partitions — an update moved a row across partitions " +
-                "or the partCol type is unsupported (orphan version; " +
-                "vacuum reclaims it)")
-        })
-    }
+            val kept =
+              if (keys.isEmpty) existing
+              else existing.join(
+                updCached.select(keys.map(col): _*).distinct(),
+                keys, "left_anti")
+            kept.unionByName(updCached, allowMissingColumns = true)
+          }
+        if (optimizeWrite) merged.repartition(col(partCol)) else merged
+      },
+      // a written dir that exists in the manifest but was NOT predicted
+      // as touched means the value→dir rendering disagreed with the
+      // writer's — its existing rows were not merged. Refuse loudly
+      // rather than commit a partition that silently dropped them.
+      checkParts = (parts, touchedDirs, mBase) => {
+        val unmerged =
+          parts.filter(p => mBase.contains(p) && !touchedDirs(p))
+        if (unmerged.nonEmpty)
+          throw new IllegalStateException(
+            "partition rendering mismatch: wrote " +
+              unmerged.mkString(", ") + " without merging its " +
+              "existing rows — partCol type unsupported for " +
+              "manifest addressing (use string/date/integral keys)")
+      },
+      lockHeld = lockHeld, publish = publish)
 
-  /** OPTIMISTIC predicate DELETE — [[delete]] semantics committed
-    * through the prepare/validate protocol, so a partition-scoped
-    * GDPR delete and any other optimistic writer touching DISJOINT
-    * partitions run their data phases concurrently instead of
-    * serializing on the table lock. Per attempt: a detection scan
-    * against the BASE version finds the partitions holding matches
-    * (re-run on every retry, so a lost race re-detects against the
-    * winner's rows), only those rewrite without their matching rows,
-    * and a partition the delete EMPTIES drops from the manifest —
-    * exactly as the serializing [[delete]] records it.
-    *
-    * Isolation is WRITE-serializable (Delta's default level): the
-    * committed state is equivalent to running the delete at its BASE
-    * snapshot — rows matching the predicate that a CONCURRENT commit
-    * inserts into partitions this delete never touched are NOT
-    * deleted (the equivalent serial order runs the delete first).
-    * A compliance sweep that must observe commit order uses the
-    * locking [[delete]], which serializes with everything — the same
-    * trade [[optimisticMerge]] documents. */
-  def optimisticDelete(spark: SparkSession, t: String,
-      where: org.apache.spark.sql.Column, partCol: String,
-      maxRetries: Int = 3, store: CommitStore = CommitStore.local,
-      txn: Option[String] = None): Long =
-    optimisticLoop(t, maxRetries) { () =>
-      optimisticAttempt(spark, t, spark.emptyDataFrame, partCol, Nil,
-        store, txn, requireBase = true, dropEmptied = true,
-        resolve = (_, touchedDirs, mBase, _) => {
-          val dirs = mBase.collect {
-            case (p, o) if touchedDirs(p) => s"${dataDir(t, o)}/$p"
-          }.toSeq
-          spark.read.option("mergeSchema", "true").parquet(dirs: _*)
-            .filter(org.apache.spark.sql.functions.not(
-              org.apache.spark.sql.functions
-                .coalesce(where, lit(false))))
-        },
-        checkParts = (parts, touchedDirs, _) => {
-          val unexpected = parts.filterNot(touchedDirs)
-          if (unexpected.nonEmpty)
-            throw new IllegalStateException(
-              "partition rendering mismatch during delete: wrote " +
-                unexpected.mkString(", ") + " outside the detected " +
-                "partitions — aborting commit (orphan version; " +
-                "vacuum reclaims it)")
-        },
-        detect = Some((base, _) =>
-          readVersion(spark, t, base.get, store).filter(where)
-            .select(col(partCol).cast("string")).distinct()
-            .collect().map(r => partDirName(
-              if (r.isNullAt(0)) None else Some(r.getString(0))))
-            .toSet))
-    }
-
-  /** OPTIMISTIC predicate UPDATE — [[updateWhere]] semantics through
-    * the prepare/validate protocol; same detection-per-attempt and
-    * write-serializable isolation as [[optimisticDelete]] (an update
-    * can never empty a partition, so manifest entries only change
-    * owner). */
-  def optimisticUpdateWhere(spark: SparkSession, t: String,
-      set: Map[String, org.apache.spark.sql.Column],
-      where: org.apache.spark.sql.Column, partCol: String,
-      maxRetries: Int = 3, store: CommitStore = CommitStore.local,
-      txn: Option[String] = None): Long =
-    optimisticLoop(t, maxRetries) { () =>
-      optimisticAttempt(spark, t, spark.emptyDataFrame, partCol, Nil,
-        store, txn, requireBase = true, dropEmptied = false,
-        resolve = (_, touchedDirs, mBase, base) => {
-          val cols = readVersion(spark, t, base.get, store).columns.toSeq
-          val dirs = mBase.collect {
-            case (p, o) if touchedDirs(p) => s"${dataDir(t, o)}/$p"
-          }.toSeq
-          val hit = org.apache.spark.sql.functions.coalesce(
-            where, lit(false))
-          spark.read.option("mergeSchema", "true").parquet(dirs: _*)
-            .select(cols.map { c =>
-              set.get(c) match {
-                case Some(e) => when(hit, e).otherwise(col(c)).as(c)
-                case None => col(c)
-              }
-            }: _*)
-        },
-        checkParts = (parts, touchedDirs, _) => {
-          val unexpected = parts.filterNot(touchedDirs)
-          if (unexpected.nonEmpty)
-            throw new IllegalStateException(
-              "partition rendering mismatch during update: wrote " +
-                unexpected.mkString(", ") + " outside the detected " +
-                "partitions — an assignment moved a row across " +
-                "partitions (orphan version; vacuum reclaims it)")
-        },
-        detect = Some((base, _) =>
-          readVersion(spark, t, base.get, store).filter(where)
-            .select(col(partCol).cast("string")).distinct()
-            .collect().map(r => partDirName(
-              if (r.isNullAt(0)) None else Some(r.getString(0))))
-            .toSet))
+  /** WRITE-AUDIT-PUBLISH, publish half: flip the pointer to a STAGED
+    * version after its audit passed. Refuses to move backwards (use
+    * [[restore]] for rollback — it preserves linear history). */
+  def publish(t: String, v: Long,
+      store: CommitStore = CommitStore.local): Unit =
+    withCommitLock(t, store) {
+      // manifest-FILE existence, not emptiness: an empty staged batch
+      // is a legitimate version (same hasManifest rule as every other
+      // dispatch site)
+      if (!hasManifest(t, v, store)) throw new IllegalStateException(
+        s"$t has no staged snapshot v$v (vacuumed or never staged)")
+      val cur = currentVersion(t, store)
+      if (cur.exists(_ >= v)) throw new IllegalStateException(
+        s"$t is already at v${cur.get} >= staged v$v — publish only " +
+          "moves forward; use restore for rollback")
+      commitPointer(t, v, store)
     }
 
   /** Bounded retry around one optimistic attempt: Right commits, Left
     * conflicts consume a retry, exhaustion refuses naming the last
     * conflict. */
-  private def optimisticLoop(t: String, maxRetries: Int)(
+  private def commitLoop(t: String, maxRetries: Int)(
       attemptOnce: () => Either[String, Long]): Long = {
     require(maxRetries >= 0, "maxRetries must be >= 0")
     var attempt = 0
@@ -1393,25 +1228,25 @@ object PartitionedSnapshots {
       }
     }
     throw new Incremental.ConcurrentWriteException(
-      s"$t: optimistic commit lost ${attempt} race" +
+      s"$t: commit lost ${attempt} race" +
         (if (attempt > 1) "s" else "") +
         s" and maxRetries=$maxRetries is exhausted — last conflict: " +
-        lastConflict + ". If the conflict names overlapping " +
-        "partitions, retry, raise maxRetries, or route this writer " +
-        "through the serializing upsert()/merge(); if it reports " +
-        "reclaimed base data on every attempt, the manifest may " +
-        "reference a missing owner dir (inspect before retrying).")
+        lastConflict + ". Concurrent writers kept taking these " +
+        "partitions: retry once they go quiet, or raise maxRetries; " +
+        "if it reports reclaimed base data on every attempt, the " +
+        "manifest may reference a missing owner dir (inspect before " +
+        "retrying).")
   }
 
-  /** One optimistic prepare+validate+commit attempt: Right(committed
-    * version) or Left(conflict description) when a concurrent commit
-    * took one of this writer's partitions since its base. The write
-    * semantics are the caller's (`resolve` computes the touched
-    * partitions' replacement rows from the cached source against the
-    * base manifest; `checkParts` refuses rendering mismatches after the
+  /** One prepare+validate+commit attempt: Right(committed version) or
+    * Left(conflict description) when a concurrent commit took one of
+    * this writer's partitions since its base. The write semantics are
+    * the caller's (`resolve` computes the touched partitions'
+    * replacement rows from the cached source against the base
+    * manifest; `checkParts` refuses rendering mismatches after the
     * data lands) — the protocol (reserve, heartbeated lock-free
     * prepare, metadata-only validate+commit, conflict classification)
-    * is shared by every optimistic writer. `dropEmptied` commits the
+    * is shared by every DML writer. `dropEmptied` commits the
     * REMOVAL of a touched partition the resolved output left empty
     * (merge's matched-DELETE emptying a partition, a predicate delete
     * emptying one); upsert/append can never empty one, and under a
@@ -1421,8 +1256,15 @@ object PartitionedSnapshots {
     * DELETE/UPDATE have no updates frame — their touched set is a
     * detection scan, re-run per attempt against each new base); a
     * detection that matches nothing short-circuits to the base
-    * version, burning no commit. */
-  private def optimisticAttempt(spark: SparkSession, t: String,
+    * version, burning no commit.
+    *
+    * `lockHeld`: the CALLER holds the table lock for the whole attempt
+    * ([[underLock]]) — the attempt then takes no lock of its own and
+    * writes no `.inflight` marker (vacuum needs that lock, so nothing
+    * can reclaim the dir), and nothing can commit in between, so it
+    * cannot conflict. `publish = false` (only under a held lock)
+    * stages the version without flipping the pointer. */
+  private def commitAttempt(spark: SparkSession, t: String,
       updates: DataFrame, partCol: String, keys: Seq[String],
       store: CommitStore, txn: Option[String], requireBase: Boolean,
       dropEmptied: Boolean,
@@ -1433,15 +1275,18 @@ object PartitionedSnapshots {
       detect: Option[(Option[Long], Map[String, Long]) => Set[String]] =
         None,
       maxRecordsPerFile: Long = 0,
-      prepareConstraints: Boolean = true): Either[String, Long] = {
+      prepareConstraints: Boolean = true,
+      lockHeld: Boolean = false,
+      publish: Boolean = true): Either[String, Long] = {
+    def locked[A](body: => A): A =
+      if (lockHeld) body else withCommitLock(t, store)(body)
     val base = currentVersion(t, store)
     if (requireBase && base.isEmpty) throw new IllegalStateException(
       s"$t has no committed snapshot")
     base.foreach { b =>
       if (!hasManifest(t, b, store)) throw new IllegalStateException(
-        s"$t is a full-copy snapshot table — optimistic commits " +
-          "target the partitioned manifest format (full-copy writers " +
-          "serialize on the table lock)")
+        s"$t is a full-copy snapshot table — these writers target " +
+          "the partitioned manifest format (use Snapshots for it)")
     }
     val mBase = base.map(manifest(t, _, store))
       .getOrElse(Map.empty[String, Long])
@@ -1454,7 +1299,7 @@ object PartitionedSnapshots {
     // concurrent ALTER TABLE ADD COLUMN X INT would otherwise commit
     // STRING-typed footers under a declared INT — a state neither
     // serial order produces (addColumn refuses an existing column;
-    // a lock-held merge treats a declared column as existing), so a
+    // a merge prepared after it treats the column as existing), so a
     // declared-schema change between prepare and commit must classify
     // as a conflict and re-resolve against the new base.
     def governingProps(): Map[String, String] =
@@ -1487,13 +1332,13 @@ object PartitionedSnapshots {
       // classify→delete sequence — the un-markered mkdirs window is
       // closed by mutual exclusion, not by timing. The data write
       // that follows stays lock-free.
-      val v = withCommitLock(t, store) {
+      val v = locked {
         val r = reserveVersion(t, store)
-        store.write(inflightPath(t, r), Array.emptyByteArray)
+        if (!lockHeld) store.write(inflightPath(t, r), Array.emptyByteArray)
         r
       }
       reserved = v
-      beat = startInflightBeat(inflightPath(t, v), store)
+      if (!lockHeld) beat = startInflightBeat(inflightPath(t, v), store)
       // the data phase reads BASE owner dirs lock-free — a concurrent
       // rewrite of a touched partition plus a vacuum can legally
       // reclaim one mid-read. That is a CONFLICT (re-preparing against
@@ -1505,11 +1350,7 @@ object PartitionedSnapshots {
         try {
           val touchedDirs = detect match {
             case Some(f) => f(base, mBase)
-            case None => updCached
-              .select(col(partCol).cast("string")).distinct()
-              .collect().map(r => partDirName(
-                if (r.isNullAt(0)) None else Some(r.getString(0))))
-              .toSet
+            case None => partDirsOf(updCached, partCol)
           }
           if (detect.isDefined && touchedDirs.isEmpty) Right(None)
           else {
@@ -1547,7 +1388,7 @@ object PartitionedSnapshots {
           store.deleteRecursively(versionDir(t, v))
           return Left(msg)
         case Right(None) =>
-          // detection matched nothing: the serializing contract ("the
+          // detection matched nothing: the no-op contract ("the
           // CURRENT version, burning nothing") against this attempt's
           // base — correct even if a later commit landed meanwhile
           // (the equivalent serial point is the base snapshot)
@@ -1559,7 +1400,7 @@ object PartitionedSnapshots {
       val (touchedDirs, parts, freshRefs) = prepared.toOption.get.get
       // the SHORT critical section: metadata only, no data IO
       val result: Either[String, Long] =
-        withCommitLock(t, store) {
+        locked {
           // liveness re-validation: if this writer's markers stopped
           // beating long enough for a vacuum to reclaim the prepared
           // dir (GC pause, store outage), committing would publish
@@ -1601,25 +1442,21 @@ object PartitionedSnapshots {
               if (dropEmptied) touchedDirs -- parts.toSet
               else Set.empty[String]
             val mNew = (mCur -- dropped) ++ parts.map(_ -> v).toMap
-            // filemeta only when the carry source exists AND
-            // cross-checks against its manifest (parsed ONCE here and
-            // handed to writeFileMeta — the critical section reads
-            // the multi-MB record a single time): untouched
-            // partitions then copy from the current version's record
+            // filemeta: when the current version's record cross-checks
+            // against its manifest (parsed ONCE here and handed to
+            // writeFileMeta — the critical section reads the multi-MB
+            // record a single time), untouched partitions copy from it
             // and the touched ones come from the prepare's lock-free
             // listing — ZERO store listings in this critical section.
-            // A pre-feature or inconsistent base would force O(live
-            // partitions) listings UNDER THE LOCK here, so the
-            // upgrade is left to indexPlanMeta or a serializing
-            // commit (which hold the lock for their data write
-            // anyway); planMeta falls back to listing until then.
+            // A pre-feature or inconsistent current record instead
+            // carries what still matches and lists the rest once, under
+            // the lock (the lazy upgrade; every later commit carries)
             val carriedRefs = cur.flatMap(c =>
               checkedFileManifest(t, c, mCur, store))
-            if (cur.isEmpty || carriedRefs.isDefined)
-              writeFileMeta(t, w, mNew, cur, store, freshRefs,
-                carriedRefs = carriedRefs)
+            writeFileMeta(t, w, mNew, cur, store, freshRefs,
+              carriedRefs = carriedRefs)
             writeManifest(t, w, mNew, store)
-            commitPointer(t, w, store, txn)
+            if (publish) commitPointer(t, w, store, txn)
             writeProps(t, partCol, keys, store)
             Right(w)
           }
@@ -1669,12 +1506,15 @@ object PartitionedSnapshots {
 
   /** The table lock is NON-blocking ([[Incremental.acquire]] throws on
     * contention — the right contract for long data-writing holders,
-    * where queueing would hide a stall). An optimistic COMMIT section
-    * is milliseconds of metadata, so contention there is transient by
-    * construction: spin with exponential backoff until the lock frees,
-    * bounded by the staleness horizon (a holder older than that is
-    * stolen by acquire itself). This is what lets N racing optimistic
-    * writers all commit instead of all-but-one refusing at the lock. */
+    * where queueing would hide a stall). A DML writer's reserve and
+    * commit sections, and every writer whose lock section holds only
+    * metadata work (publish, initTable, addColumn, the stats and index
+    * prop setters), last milliseconds, so contention there is
+    * transient by construction: spin with exponential backoff until
+    * the lock frees, bounded by the staleness horizon (a holder older
+    * than that is stolen by acquire itself). This is what lets N
+    * racing writers all commit instead of all-but-one refusing at the
+    * lock. */
   private def withCommitLock[A](t: String, store: CommitStore)
       (body: => A): A =
     Incremental.spinOnContention() {
@@ -1707,79 +1547,6 @@ object PartitionedSnapshots {
     th.start()
     th
   }
-
-  private def upsertImpl(spark: SparkSession, t: String,
-      updates: DataFrame, keys: Seq[String], partCol: String,
-      optimizeWrite: Boolean, publish: Boolean,
-      store: CommitStore, txn: Option[String] = None): Long =
-    Incremental.withLock(t, Incremental.DefaultLockStaleMs, store) {
-      val v = reserveVersion(t, store)
-      def shaped(df: DataFrame): DataFrame =
-        if (optimizeWrite) df.repartition(col(partCol)) else df
-      currentVersion(t, store) match {
-        case None =>
-          val parts = writeData(shaped(updates), t, v, partCol, store)
-          val mNew = parts.map(_ -> v).toMap
-          writeFileMeta(t, v, mNew, None, store, enrichRows = _ == v)
-          writeManifest(t, v, mNew, store)
-        case Some(cur) =>
-          val m = manifest(t, cur, store)
-          val updCached = updates.cache()
-          try {
-            // touched partition dir names, derived with SPARK'S OWN
-            // escaping (ExternalCatalogUtils — the same routine the
-            // partitioned writer uses), so only the touched owners'
-            // dirs are ever LISTED, let alone read: the upsert's IO is
-            // O(touched partitions) at the metadata level too. Values
-            // render through cast-to-string (the writer's rendering);
-            // string/date/integral partition keys — the usual layout
-            // columns — round-trip exactly.
-            val touchedDirs = updCached
-              .select(col(partCol).cast("string")).distinct()
-              .collect().map(r => partDirName(
-                if (r.isNullAt(0)) None else Some(r.getString(0))))
-              .toSet
-            val existingDirs = m.collect {
-              case (p, owner) if touchedDirs(p) =>
-                s"${dataDir(t, owner)}/$p"
-            }.toSeq
-            // empty `keys` = append semantics: keep every existing row
-            val merged =
-              if (existingDirs.isEmpty) updCached
-              else {
-                val existing = spark.read.option("mergeSchema", "true")
-                  .parquet(existingDirs: _*)
-                val kept =
-                  if (keys.isEmpty) existing
-                  else existing.join(
-                    updCached.select(keys.map(col): _*).distinct(),
-                    keys, "left_anti")
-                kept.unionByName(updCached, allowMissingColumns = true)
-              }
-            val parts = writeData(shaped(merged), t, v, partCol, store)
-            // a written dir that exists in the manifest but was NOT
-            // predicted as touched means the value→dir rendering
-            // disagreed with the writer's — its existing rows were not
-            // merged. Refuse loudly rather than commit a partition that
-            // silently dropped them (the version dir stays an orphan;
-            // vacuum reclaims it).
-            val unmerged = parts.filter(p => m.contains(p) && !touchedDirs(p))
-            if (unmerged.nonEmpty)
-              throw new IllegalStateException(
-                "partition rendering mismatch: wrote " +
-                  unmerged.mkString(", ") + " without merging its " +
-                  "existing rows — partCol type unsupported for " +
-                  "manifest addressing (use string/date/integral keys)")
-            val mNew = m ++ parts.map(_ -> v).toMap
-            writeFileMeta(t, v, mNew, Some(cur), store,
-          enrichRows = _ == v)
-            writeManifest(t, v, mNew, store)
-          } finally updCached.unpersist()
-      }
-      if (publish) commitPointer(t, v, store, txn)
-      writeProps(t, partCol, keys, store)
-      v
-    }
 
   /** Read the current committed version. */
   def read(spark: SparkSession, t: String,
@@ -1925,7 +1692,7 @@ object PartitionedSnapshots {
       // and without the `.reserved` grace a vacuum in that window
       // would delete the dir out from under it (re-opening the very
       // version-number collision reserveVersion exists to prevent).
-      // A live LEGACY writer needs no grace — it holds the lock this
+      // A live lock-holding writer needs no grace — it holds the lock this
       // vacuum is running under — so a bare dir with a fresh
       // `.reserved` seen from INSIDE the lock is either a crashed
       // writer within the horizon (reclaimed by the next vacuum after
@@ -1978,7 +1745,7 @@ object PartitionedSnapshots {
       // liveness immediately adjacent to each delete, so a dir that
       // became a live preparation mid-vacuum is kept, not destroyed
       // under the writer. Reservations themselves run under the table
-      // lock this vacuum holds (optimisticAttempt takes it for the
+      // lock this vacuum holds (commitAttempt takes it for the
       // reserve+mark step), so a claim cannot interleave with this
       // loop at all — the fused check is defense in depth.
       drop.flatMap { v =>
@@ -2068,6 +1835,48 @@ object PartitionedSnapshots {
       org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
         .escapePathName)
 
+  /** Partition dir names of `df`'s distinct `partCol` values, derived
+    * with SPARK'S OWN escaping (ExternalCatalogUtils — the routine the
+    * partitioned writer uses), so a writer only ever LISTS, let alone
+    * reads, the touched owners' dirs. Values render through
+    * cast-to-string (the writer's rendering); string/date/integral
+    * partition keys round-trip exactly. The collect is
+    * partition-VALUE-sized, never rows. */
+  private def partDirsOf(df: DataFrame, partCol: String): Set[String] =
+    df.select(col(partCol).cast("string")).distinct().collect()
+      .map(r => partDirName(
+        if (r.isNullAt(0)) None else Some(r.getString(0))))
+      .toSet
+
+  /** The owner data dirs manifest `m` maps partitions `parts` to. */
+  private def ownerDirs(t: String, m: Map[String, Long],
+      parts: Set[String]): Seq[String] =
+    m.collect { case (p, o) if parts(p) => s"${dataDir(t, o)}/$p" }
+      .toSeq.sorted
+
+  /** The detection scan of the predicate writers: partitions of
+    * version `v` holding a row `where` is TRUE for (predicate pushdown
+    * and footer stats prune it). */
+  private def matchingParts(spark: SparkSession, t: String, v: Long,
+      where: org.apache.spark.sql.Column, partCol: String,
+      store: CommitStore): Set[String] =
+    partDirsOf(readVersion(spark, t, v, store).filter(where), partCol)
+
+  /** `checkParts` for writers whose output must land inside the
+    * partitions they read: a dir written outside them means the
+    * value→dir rendering disagreed with the writer's or a row moved
+    * partitions — refuse before the commit. */
+  private def landsInside(op: String, read: String, cause: String)
+      : (Seq[String], Set[String], Map[String, Long]) => Unit =
+    (parts, touchedDirs, _) => {
+      val unexpected = parts.filterNot(touchedDirs)
+      if (unexpected.nonEmpty)
+        throw new IllegalStateException(
+          s"partition rendering mismatch during $op: wrote " +
+            unexpected.mkString(", ") + s" outside $read — $cause " +
+            "(orphan version; vacuum reclaims it)")
+    }
+
   /** Predicate DELETE as a new version — the GDPR/retention path every
     * lakehouse needs: one detection scan finds the partitions holding
     * matches (predicate pushdown + footer stats prune it), ONLY those
@@ -2079,53 +1888,39 @@ object PartitionedSnapshots {
     * version dirs — the usual MVCC caveat for hard-delete compliance
     * (run vacuum to make removal physical).
     *
-    * Returns the committed version (the CURRENT version, burning
+    * Commits through [[upsert]]'s protocol, with the detection re-run
+    * against every attempt's BASE version (a lost race re-detects
+    * against the winner's rows). Isolation is WRITE-serializable
+    * (Delta's default level): the committed state is equivalent to
+    * running the delete at its base snapshot — rows matching the
+    * predicate that a CONCURRENT commit inserts into partitions this
+    * delete never touched are NOT deleted (the equivalent serial order
+    * runs the delete first).
+    *
+    * Returns the committed version (the base version, burning
     * nothing, when no row matches). */
   def delete(spark: SparkSession, t: String,
       where: org.apache.spark.sql.Column, partCol: String,
-      store: CommitStore = CommitStore.local): Long =
-    Incremental.withLock(t, Incremental.DefaultLockStaleMs, store) {
-      val cur = currentVersion(t, store).getOrElse(
-        throw new IllegalStateException(s"$t has no committed snapshot"))
-      val m = manifest(t, cur, store)
-      // collect is partition-VALUE-sized (the touched set), never rows
-      val touchedDirs = readVersion(spark, t, cur, store)
-        .filter(where)
-        .select(col(partCol).cast("string")).distinct()
-        .collect()
-        .map(r => partDirName(
-          if (r.isNullAt(0)) None else Some(r.getString(0))))
-        .toSet
-      if (touchedDirs.isEmpty) cur
-      else {
-        val v = reserveVersion(t, store)
-        val dirs = m.collect {
-          case (p, o) if touchedDirs(p) => s"${dataDir(t, o)}/$p"
-        }.toSeq
+      store: CommitStore = CommitStore.local,
+      maxRetries: Int = 3): Long =
+    commitLoop(t, maxRetries) { () =>
+      commitAttempt(spark, t, spark.emptyDataFrame, partCol, Nil,
+        store, None, requireBase = true, dropEmptied = true,
         // keep every row the predicate does NOT prove TRUE for: a
         // NULL verdict keeps the row (three-valued logic, same rule
         // as updateWhere's `hit` and MERGE's delete flag — a bare
         // not(where) would silently delete NULL-predicate rows of
         // touched partitions)
-        val kept = spark.read.option("mergeSchema", "true")
-          .parquet(dirs: _*)
-          .filter(org.apache.spark.sql.functions.not(
-            org.apache.spark.sql.functions.coalesce(where, lit(false))))
-        val parts = writeData(kept, t, v, partCol, store)
-        val unexpected = parts.filterNot(touchedDirs)
-        if (unexpected.nonEmpty)
-          throw new IllegalStateException(
-            "partition rendering mismatch during delete: wrote " +
-              unexpected.mkString(", ") + " outside the detected " +
-              "partitions — aborting commit (orphan version; vacuum " +
-              "reclaims it)")
-        val mNew = (m -- touchedDirs) ++ parts.map(_ -> v).toMap
-        writeFileMeta(t, v, mNew, Some(cur), store,
-          enrichRows = _ == v)
-        writeManifest(t, v, mNew, store)
-        commitPointer(t, v, store)
-        v
-      }
+        resolve = (_, touchedDirs, mBase, _) =>
+          spark.read.option("mergeSchema", "true")
+            .parquet(ownerDirs(t, mBase, touchedDirs): _*)
+            .filter(org.apache.spark.sql.functions.not(
+              org.apache.spark.sql.functions
+                .coalesce(where, lit(false)))),
+        checkParts = landsInside("delete", "the detected partitions",
+          "aborting commit"),
+        detect = Some((base, _) =>
+          matchingParts(spark, t, base.get, where, partCol, store)))
     }
 
   /** Predicate UPDATE as a new version (SQL `UPDATE t SET … WHERE …`):
@@ -2133,58 +1928,37 @@ object PartitionedSnapshots {
     * those rewrite with the assignments applied to their matching rows
     * (a NULL predicate row is NOT updated — three-valued logic), and
     * every other partition's manifest entry carries over — the same
-    * O(touched partitions) shape as [[delete]]. Assignments must not
+    * O(touched partitions) shape, commit protocol and
+    * write-serializable isolation as [[delete]]. Assignments must not
     * move a row across partitions (checked, like [[merge]]).
     *
-    * Returns the committed version (the CURRENT version, burning
+    * Returns the committed version (the base version, burning
     * nothing, when no row matches). */
   def updateWhere(spark: SparkSession, t: String,
       set: Map[String, org.apache.spark.sql.Column],
       where: org.apache.spark.sql.Column, partCol: String,
-      store: CommitStore = CommitStore.local): Long =
-    Incremental.withLock(t, Incremental.DefaultLockStaleMs, store) {
-      val cur = currentVersion(t, store).getOrElse(
-        throw new IllegalStateException(s"$t has no committed snapshot"))
-      val m = manifest(t, cur, store)
-      val touchedDirs = readVersion(spark, t, cur, store)
-        .filter(where)
-        .select(col(partCol).cast("string")).distinct()
-        .collect()
-        .map(r => partDirName(
-          if (r.isNullAt(0)) None else Some(r.getString(0))))
-        .toSet
-      if (touchedDirs.isEmpty) cur
-      else {
-        val v = reserveVersion(t, store)
-        val dirs = m.collect {
-          case (p, o) if touchedDirs(p) => s"${dataDir(t, o)}/$p"
-        }.toSeq
-        val cols = readVersion(spark, t, cur, store).columns.toSeq
-        val hit = org.apache.spark.sql.functions.coalesce(
-          where, lit(false))
-        val updated = spark.read.option("mergeSchema", "true")
-          .parquet(dirs: _*)
-          .select(cols.map { c =>
-            set.get(c) match {
-              case Some(e) => when(hit, e).otherwise(col(c)).as(c)
-              case None => col(c)
-            }
-          }: _*)
-        val parts = writeData(updated, t, v, partCol, store)
-        val unexpected = parts.filterNot(touchedDirs)
-        if (unexpected.nonEmpty)
-          throw new IllegalStateException(
-            "partition rendering mismatch during update: wrote " +
-              unexpected.mkString(", ") + " outside the detected " +
-              "partitions — an assignment moved a row across " +
-              "partitions (orphan version; vacuum reclaims it)")
-        val mNew = (m -- touchedDirs) ++ parts.map(_ -> v).toMap
-        writeFileMeta(t, v, mNew, Some(cur), store,
-          enrichRows = _ == v)
-        writeManifest(t, v, mNew, store)
-        commitPointer(t, v, store)
-        v
-      }
+      store: CommitStore = CommitStore.local,
+      maxRetries: Int = 3): Long =
+    commitLoop(t, maxRetries) { () =>
+      commitAttempt(spark, t, spark.emptyDataFrame, partCol, Nil,
+        store, None, requireBase = true, dropEmptied = false,
+        resolve = (_, touchedDirs, mBase, base) => {
+          val cols = readVersion(spark, t, base.get, store).columns.toSeq
+          val hit = org.apache.spark.sql.functions.coalesce(
+            where, lit(false))
+          spark.read.option("mergeSchema", "true")
+            .parquet(ownerDirs(t, mBase, touchedDirs): _*)
+            .select(cols.map { c =>
+              set.get(c) match {
+                case Some(e) => when(hit, e).otherwise(col(c)).as(c)
+                case None => col(c)
+              }
+            }: _*)
+        },
+        checkParts = landsInside("update", "the detected partitions",
+          "an assignment moved a row across partitions"),
+        detect = Some((base, _) =>
+          matchingParts(spark, t, base.get, where, partCol, store)))
     }
 
   /** Column refs for [[merge]] clause expressions: `target("c")` /
@@ -2212,6 +1986,13 @@ object PartitionedSnapshots {
     * key (an update must not move a row across partitions — express
     * that as delete + insert through two merges if ever needed).
     *
+    * Commits through [[upsert]]'s protocol: any partition this merge
+    * reads or writes that changed owner since the base version refuses
+    * the attempt, and a bounded retry re-resolves the clauses against
+    * the new current version — a lost race re-reads the winner's rows
+    * before matching, never matches against stale data. A
+    * matched-DELETE that empties a partition drops its manifest entry.
+    *
     * Schema: by default the output projects to the TARGET's columns —
     * extra source columns are usable in clause expressions (a delete
     * flag) but never land, matching Delta's default. `evolveSchema`
@@ -2226,75 +2007,71 @@ object PartitionedSnapshots {
       insertNotMatched: Boolean = true,
       insertCond: Option[org.apache.spark.sql.Column] = None,
       evolveSchema: Boolean = false,
-      store: CommitStore = CommitStore.local): Long =
-    Incremental.withLock(t, Incremental.DefaultLockStaleMs, store) {
-      val cur = currentVersion(t, store).getOrElse(
-        throw new IllegalStateException(s"$t has no committed snapshot"))
-      val m = manifest(t, cur, store)
-      val v = reserveVersion(t, store)
-      val srcCached = src.cache()
-      try {
-        val touchedDirs = srcCached
-          .select(col(partCol).cast("string")).distinct()
-          .collect().map(r => partDirName(
-            if (r.isNullAt(0)) None else Some(r.getString(0))))
-          .toSet
-        val existingDirs = m.collect {
-          case (p, o) if touchedDirs(p) => s"${dataDir(t, o)}/$p"
-        }.toSeq
-        val full = read(spark, t, store)
-        val targetCols0 = full.columns.toSeq
-        val tgt0 =
-          if (existingDirs.isEmpty) full.limit(0)
-          else spark.read.option("mergeSchema", "true")
-            .parquet(existingDirs: _*)
-        // schema evolution: widen the target with the source's NEW
-        // columns (null for existing rows) so clauses can land them
-        val newCols =
-          if (evolveSchema)
-            srcCached.columns.toSeq.filterNot(targetCols0.contains)
-          else Nil
-        val targetCols = targetCols0 ++ newCols
-        // also null-fill any table column the touched (old-footer)
-        // partitions predate — mergeSchema over a pre-evolution subset
-        // surfaces only the columns those footers carry
-        val tgt = targetCols.foldLeft(tgt0)((d, c) =>
-          if (d.columns.contains(c)) d
-          else d.withColumn(c, lit(null).cast(
-            if (newCols.contains(c)) srcCached.schema(c).dataType
-            else full.schema(c).dataType)))
-        val resolved = MergeClauses.resolve(tgt, srcCached, keys,
-          targetCols, whenMatchedUpdate, whenMatchedDelete,
-          insertNotMatched, insertCond)
-        val parts = writeData(resolved, t, v, partCol, store)
-        val unexpected = parts.filterNot(touchedDirs)
-        if (unexpected.nonEmpty)
-          throw new IllegalStateException(
-            "partition rendering mismatch during merge: wrote " +
-              unexpected.mkString(", ") + " outside the source's " +
-              "partitions — an update moved a row across partitions " +
-              "or the partCol type is unsupported (orphan version; " +
-              "vacuum reclaims it)")
-        val mNew = (m -- touchedDirs) ++ parts.map(_ -> v).toMap
-        writeFileMeta(t, v, mNew, Some(cur), store,
-          enrichRows = _ == v)
-        writeManifest(t, v, mNew, store)
-        commitPointer(t, v, store)
-        writeProps(t, partCol, keys, store)
-        v
-      } finally srcCached.unpersist()
+      store: CommitStore = CommitStore.local,
+      maxRetries: Int = 3): Long =
+    commitLoop(t, maxRetries) { () =>
+      commitAttempt(spark, t, src, partCol, keys, store, None,
+        requireBase = true, dropEmptied = true,
+        resolve = (srcCached, touchedDirs, mBase, base) => {
+          // the schema source is the BASE version — the exact state the
+          // validation will verify. Re-derived on EVERY attempt: a
+          // concurrent evolveSchema merge can widen the table between
+          // attempts, and the re-resolve must see the new base's
+          // columns. On an indexed table the schema comes from planMeta
+          // (metadata-only).
+          val full = readVersion(spark, t, base.get, store)
+          val existingDirs = ownerDirs(t, mBase, touchedDirs)
+          val targetCols0 = full.columns.toSeq
+          val tgt0 =
+            if (existingDirs.isEmpty) full.limit(0)
+            else spark.read.option("mergeSchema", "true")
+              .parquet(existingDirs: _*)
+          // schema evolution: widen the target with the source's NEW
+          // columns (null for existing rows) so clauses can land them
+          val newCols =
+            if (evolveSchema)
+              srcCached.columns.toSeq.filterNot(targetCols0.contains)
+            else Nil
+          val targetCols = targetCols0 ++ newCols
+          // also null-fill any table column the touched (old-footer)
+          // partitions predate — mergeSchema over a pre-evolution subset
+          // surfaces only the columns those footers carry
+          val tgt = targetCols.foldLeft(tgt0)((d, c) =>
+            if (d.columns.contains(c)) d
+            else d.withColumn(c, lit(null).cast(
+              if (newCols.contains(c)) srcCached.schema(c).dataType
+              else full.schema(c).dataType)))
+          MergeClauses.resolve(tgt, srcCached, keys, targetCols,
+            whenMatchedUpdate, whenMatchedDelete, insertNotMatched,
+            insertCond)
+        },
+        checkParts = landsInside("merge", "the source's partitions",
+          "an update moved a row across partitions or the partCol " +
+            "type is unsupported"))
     }
 
   /** OPTIMIZE: rewrite the current version's FRAGMENTED partitions
     * (≥ `minFiles` data files — the debris a streaming upsert cadence
     * leaves, one task-count's worth of files per touched partition per
     * batch) into one coalesced file each, committed as a NEW version
-    * through the same manifest + pointer protocol as any upsert. Pure
-    * maintenance: the row set is bit-identical, readers pinned to prior
-    * versions keep their immutable dirs, and partitions already compact
-    * carry their manifest entry over without a byte moving. IO is
-    * O(fragmented partitions) — the manifest names the owner dirs, so
-    * only those are listed and read.
+    * through [[upsert]]'s protocol. Pure maintenance: the row set is
+    * bit-identical, readers pinned to prior versions keep their
+    * immutable dirs, and partitions already compact carry their
+    * manifest entry over without a byte moving. IO is O(fragmented
+    * partitions) — the manifest names the owner dirs, so only those
+    * are listed and read — and a compaction of COLD partitions runs
+    * its data phase at the same time as writers to other partitions.
+    *
+    * Fragmentation DETECTION runs against each attempt's BASE version
+    * (from the commit-recorded file manifest when it cross-checks —
+    * zero listings), so a lost race re-detects against the winner's
+    * state, which may already be compact. The write bypasses
+    * Constraints.prepare: the rows already passed the gate when first
+    * written, re-checking per attempt would burn Spark jobs, and
+    * generated-column backfill would break the identity — so
+    * write-serializable isolation degenerates to plain
+    * serializability here. A zero-row fragmented dir yields no
+    * rewritten dir and KEEPS its manifest entry.
     *
     * One file per partition comes from `repartition(partCol)`: each
     * partition value hashes to exactly one task, and a task writes one
@@ -2320,55 +2097,35 @@ object PartitionedSnapshots {
   def compact(spark: SparkSession, t: String, partCol: String,
       minFiles: Int = 2, maxRecordsPerFile: Long = 0,
       clusterBy: Seq[String] = Nil, zOrderBy: Seq[String] = Nil,
-      store: CommitStore = CommitStore.local): (Long, Seq[String]) = {
+      store: CommitStore = CommitStore.local,
+      maxRetries: Int = 3): (Long, Seq[String]) = {
     require(minFiles >= 2, "minFiles < 2 would rewrite compact partitions")
     require(clusterBy.isEmpty || zOrderBy.isEmpty,
       "pick clusterBy (single-dim) or zOrderBy (Morton), not both")
-    Incremental.withLock(t, Incremental.DefaultLockStaleMs, store) {
-      val cur = currentVersion(t, store).getOrElse(
-        throw new IllegalStateException(s"$t has no committed snapshot"))
-      val m = manifest(t, cur, store)
-      val fragSet0 = fragmentedParts(t, cur, m, minFiles, store)
-      val frag = m.toSeq.sorted.filter { case (p, _) => fragSet0(p) }
-      if (frag.isEmpty) (cur, Seq.empty)
-      else {
-        val v = reserveVersion(t, store)
-        val dirs = frag.map { case (p, owner) => s"${dataDir(t, owner)}/$p" }
-        val frag0 = spark.read.option("mergeSchema", "true")
-          .parquet(dirs: _*)
-        val rows = compactionShape(frag0, partCol, clusterBy, zOrderBy)
-        rows.withColumn("__p", col(partCol))
-          .write.partitionBy("__p")
-          .option("maxRecordsPerFile", maxRecordsPerFile)
-          .mode(SaveMode.Overwrite)
-          .parquet(dataDir(t, v))
-        // owner schema for the plan-from-metadata path: the rewrite
-        // wrote exactly `rows`' columns (the fragmented footers' union)
-        store.write(dataSchemaPath(t, v),
-          rows.schema.json.getBytes("UTF-8"))
-        val parts = store.listEntries(dataDir(t, v))
-          .filter(e => e.isDir && e.name.startsWith("__p="))
-          .map(_.name)
-        val fragSet = frag.map(_._1).toSet
-        // same guard as upsert: a dir the writer rendered that we did
-        // not read would silently shadow unmerged rows — refuse
-        val unexpected = parts.filterNot(fragSet)
-        if (unexpected.nonEmpty)
-          throw new IllegalStateException(
-            "partition rendering mismatch during compaction: wrote " +
-              unexpected.mkString(", ") + " which was not among the " +
-              "fragmented dirs read — aborting commit (orphan version; " +
-              "vacuum reclaims it)")
-        // a fragmented dir whose files held zero rows yields no
-        // rewritten dir; it leaves the manifest (still zero rows)
-        val mNew = (m -- fragSet) ++ parts.map(_ -> v).toMap
-        writeFileMeta(t, v, mNew, Some(cur), store,
-          enrichRows = _ == v)
-        writeManifest(t, v, mNew, store)
-        commitPointer(t, v, store)
-        (v, parts)
-      }
+    // the successful attempt's written dirs — assigned by checkParts
+    // AFTER the rendering guard passes, so the committed attempt's
+    // value is the one returned (attempts run sequentially)
+    @volatile var committedParts: Seq[String] = Seq.empty
+    val inside = landsInside("compaction", "the fragmented dirs read",
+      "aborting commit")
+    val v = commitLoop(t, maxRetries) { () =>
+      committedParts = Seq.empty
+      commitAttempt(spark, t, spark.emptyDataFrame, partCol, Nil,
+        store, None, requireBase = true, dropEmptied = false,
+        resolve = (_, touchedDirs, mBase, _) =>
+          compactionShape(spark.read.option("mergeSchema", "true")
+            .parquet(ownerDirs(t, mBase, touchedDirs): _*),
+            partCol, clusterBy, zOrderBy),
+        checkParts = (parts, touchedDirs, mBase) => {
+          inside(parts, touchedDirs, mBase)
+          committedParts = parts
+        },
+        detect = Some((base, mBase) =>
+          fragmentedParts(t, base.get, mBase, minFiles, store)),
+        maxRecordsPerFile = maxRecordsPerFile,
+        prepareConstraints = false)
     }
+    (v, committedParts)
   }
 
   /** Version `v`'s partitions holding ≥ `minFiles` data files — the
@@ -2390,8 +2147,7 @@ object PartitionedSnapshots {
       }.toSet
     }
 
-  /** The OPTIMIZE rewrite shape shared by [[compact]] and
-    * [[optimisticCompact]]: one task per partition value
+  /** The OPTIMIZE rewrite shape of [[compact]]: one task per partition value
     * (`repartition(partCol)`), rows sorted within it on the cluster
     * key or the Morton interleave of the z-order dimensions (per-dim
     * min/max collected to literals over the fragmented rows). */
@@ -2421,79 +2177,6 @@ object PartitionedSnapshots {
       if (sortCols.isEmpty) shuffled
       else shuffled.sortWithinPartitions(sortCols.map(col): _*)
     if (zOrderBy.isEmpty) rows0 else rows0.drop("__z")
-  }
-
-  /** OPTIMISTIC [[compact]] — the OPTIMIZE rewrite committed through
-    * the prepare/validate protocol ([[optimisticUpsert]]), so a
-    * compaction of COLD partitions and concurrent writers touching
-    * DISJOINT partitions run their data phases at the same time
-    * instead of the maintenance job serializing the whole table on
-    * the single-writer lock (round-14's conceded gap: a hot table
-    * could never compact without stalling its writers).
-    *
-    * Per attempt: fragmentation DETECTION runs against the BASE
-    * version (from the commit-recorded file manifest when it
-    * cross-checks — zero listings; re-run on every retry, so a lost
-    * race re-detects against the winner's state, which may already
-    * be compact), only the fragmented partitions rewrite, and the
-    * conflict rule is the same ownership diff as every optimistic
-    * writer: a concurrent commit that took ANY detected partition
-    * refuses the attempt and a bounded retry re-detects on the new
-    * base. Detection finding nothing short-circuits to the current
-    * version, burning no commit — same contract as [[compact]]'s
-    * `(cur, Nil)`.
-    *
-    * The row set is bit-identical by construction (a pure rewrite —
-    * the write bypasses Constraints.prepare exactly as the
-    * serializing [[compact]] does: the rows already passed the gate
-    * when first written, so re-checking per attempt would burn Spark
-    * jobs, and generated-column backfill would break the identity),
-    * so WRITE-serializable isolation degenerates to plain
-    * serializability here: the committed state equals running the
-    * compaction at its commit point. A zero-row fragmented dir
-    * yields no rewritten dir and KEEPS its manifest entry (the
-    * serializing path's rule; `dropEmptied` stays off — dropping on
-    * a rendering mismatch would be silent data loss, not cleanup). */
-  def optimisticCompact(spark: SparkSession, t: String,
-      partCol: String, minFiles: Int = 2, maxRecordsPerFile: Long = 0,
-      clusterBy: Seq[String] = Nil, zOrderBy: Seq[String] = Nil,
-      maxRetries: Int = 3, store: CommitStore = CommitStore.local,
-      txn: Option[String] = None): (Long, Seq[String]) = {
-    require(minFiles >= 2, "minFiles < 2 would rewrite compact partitions")
-    require(clusterBy.isEmpty || zOrderBy.isEmpty,
-      "pick clusterBy (single-dim) or zOrderBy (Morton), not both")
-    // the successful attempt's written dirs — assigned by checkParts
-    // AFTER the rendering guard passes, so the committed attempt's
-    // value is the one returned (attempts run sequentially)
-    @volatile var committedParts: Seq[String] = Seq.empty
-    val v = optimisticLoop(t, maxRetries) { () =>
-      committedParts = Seq.empty
-      optimisticAttempt(spark, t, spark.emptyDataFrame, partCol, Nil,
-        store, txn, requireBase = true, dropEmptied = false,
-        resolve = (_, touchedDirs, mBase, _) => {
-          val dirs = mBase.collect {
-            case (p, o) if touchedDirs(p) => s"${dataDir(t, o)}/$p"
-          }.toSeq.sorted
-          compactionShape(
-            spark.read.option("mergeSchema", "true").parquet(dirs: _*),
-            partCol, clusterBy, zOrderBy)
-        },
-        checkParts = (parts, touchedDirs, _) => {
-          val unexpected = parts.filterNot(touchedDirs)
-          if (unexpected.nonEmpty)
-            throw new IllegalStateException(
-              "partition rendering mismatch during compaction: wrote " +
-                unexpected.mkString(", ") + " which was not among the " +
-                "fragmented dirs read — aborting commit (orphan " +
-                "version; vacuum reclaims it)")
-          committedParts = parts
-        },
-        detect = Some((base, mBase) =>
-          fragmentedParts(t, base.get, mBase, minFiles, store)),
-        maxRecordsPerFile = maxRecordsPerFile,
-        prepareConstraints = false)
-    }
-    (v, committedParts)
   }
 
   /** Change-data-capture between two retained versions in
@@ -2728,11 +2411,8 @@ object PartitionedSnapshots {
     // staleness note); locked (props are a read-modify-write file) and
     // spin-wrapped so a concurrent writer's transient hold never fails
     // a finished index build
-    Incremental.spinOnContention() {
-      Incremental.withLock(t, Incremental.DefaultLockStaleMs, store) {
-        updateProps(t, Map("zonemap" -> cols.mkString(",")),
-          store = store)
-      }
+    withCommitLock(t, store) {
+      updateProps(t, Map("zonemap" -> cols.mkString(",")), store = store)
     }
     v
   }
@@ -2751,11 +2431,8 @@ object PartitionedSnapshots {
       dirs => BloomIndex.collect(spark, dirs, cols,
         expectedItemsPerFile, fpp))
     // see buildZoneMap's note on the prop
-    Incremental.spinOnContention() {
-      Incremental.withLock(t, Incremental.DefaultLockStaleMs, store) {
-        updateProps(t, Map("bloomidx" -> cols.mkString(",")),
-          store = store)
-      }
+    withCommitLock(t, store) {
+      updateProps(t, Map("bloomidx" -> cols.mkString(",")), store = store)
     }
     v
   }

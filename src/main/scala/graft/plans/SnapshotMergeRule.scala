@@ -18,9 +18,10 @@ import org.apache.spark.sql.graft.Bridge
   * commit IS the row-level operation here). Instead, this resolution
   * rule intercepts the analyzed [[MergeIntoTable]] whose target is a
   * [[SnapshotWritableTable]] and lowers it to a command that routes
-  * through [[PartitionedSnapshots.merge]] — the same single-writer
-  * lock + touched-partition rewrite + manifest + atomic pointer flip
-  * as the operator API, with O(touched partitions) data cost.
+  * through [[PartitionedSnapshots.merge]] — the same
+  * touched-partition rewrite + manifest + atomic pointer flip (one
+  * optimistic commit protocol) as the operator API, with O(touched
+  * partitions) data cost.
   *
   * Injected in the analyzer's main resolution batch (via
   * [[GraftExtensions]]), so it fires before the built-in row-level

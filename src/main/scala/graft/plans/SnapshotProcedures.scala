@@ -210,22 +210,10 @@ private[plans] object SnapshotProcedures {
           result(StructType.fromDDL("deleted_version BIGINT"),
             deleted.map(v => row(v)))
         case "compact" =>
-          // SET graft.dml.optimistic=true routes the maintenance
-          // rewrite through the prepare/validate commit (same opt-in
-          // as SQL UPDATE/DELETE, via the same shared lenient parser —
-          // SnapshotSqlCatalog.dmlOptimistic): a compaction of cold
-          // partitions then runs concurrently with disjoint writers
-          // instead of serializing the table on the single-writer lock
-          val (v, parts) =
-            if (SnapshotSqlCatalog.dmlOptimistic(spark))
-              PartitionedSnapshots.optimisticCompact(spark, t,
-                partColOf, minFiles = input.getInt(1),
-                maxRecordsPerFile = input.getLong(2),
-                clusterBy = csv(3), zOrderBy = csv(4), store = store)
-            else PartitionedSnapshots.compact(spark, t,
-              partColOf, minFiles = input.getInt(1),
-              maxRecordsPerFile = input.getLong(2),
-              clusterBy = csv(3), zOrderBy = csv(4), store = store)
+          val (v, parts) = PartitionedSnapshots.compact(spark, t,
+            partColOf, minFiles = input.getInt(1),
+            maxRecordsPerFile = input.getLong(2),
+            clusterBy = csv(3), zOrderBy = csv(4), store = store)
           result(StructType.fromDDL(
             "version BIGINT, partitions_compacted INT"),
             Seq(row(v, parts.size)))

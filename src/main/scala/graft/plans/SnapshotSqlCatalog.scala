@@ -466,8 +466,12 @@ class SnapshotSqlCatalog extends TableCatalog
   *  - `MERGE INTO snap.t`       → intercepted by [[SnapshotMergeRule]]
   *    and routed to [[PartitionedSnapshots.merge]]
   *
-  * Every path takes the single-writer lock, writes data, commits a
-  * manifest, and flips the pointer atomically — SQL writers get exactly
+  * Every path writes data, commits a manifest, and flips the pointer
+  * atomically through the operator's commit protocol (INSERT, MERGE,
+  * UPDATE and DELETE through the one optimistic protocol of
+  * [[PartitionedSnapshots.upsert]]: disjoint-partition writers run
+  * concurrently, a writer losing a race on its partitions retries up
+  * to 3 times, then refuses naming them) — SQL writers get exactly
   * the guarantees operator-API writers get, and mutations outside the
   * protocol remain impossible (there is no path that bypasses it). The
   * partition column comes from the table's recorded layout
@@ -519,44 +523,18 @@ private[plans] class SnapshotWritableTable(
       insertNotMatched: Boolean,
       insertCond: Option[org.apache.spark.sql.Column],
       evolveSchema: Boolean): Unit = {
-    // `SET graft.merge.optimistic=true` opts SQL MERGE INTO into the
-    // prepare/validate commit (disjoint-partition merges run their
-    // data writes concurrently; losers retry bounded). Default stays
-    // the single-writer lock — the right call for maintenance merges
-    // that must not lose a race.
-    val optimistic = spark.conf
-      .getOption("graft.merge.optimistic").exists(_.toBoolean)
-    if (optimistic)
-      PartitionedSnapshots.optimisticMerge(spark, tablePath, src, keys,
-        partCol, whenMatchedUpdate = update, whenMatchedDelete = delete,
-        insertNotMatched = insertNotMatched, insertCond = insertCond,
-        evolveSchema = evolveSchema, store = store)
-    else
-      PartitionedSnapshots.merge(spark, tablePath, src, keys, partCol,
-        whenMatchedUpdate = update, whenMatchedDelete = delete,
-        insertNotMatched = insertNotMatched, insertCond = insertCond,
-        evolveSchema = evolveSchema, store = store)
+    PartitionedSnapshots.merge(spark, tablePath, src, keys, partCol,
+      whenMatchedUpdate = update, whenMatchedDelete = delete,
+      insertNotMatched = insertNotMatched, insertCond = insertCond,
+      evolveSchema = evolveSchema, store = store)
     ()
   }
-
-  /** `SET graft.dml.optimistic=true` opts SQL UPDATE/DELETE into the
-    * prepare/validate commit (write-serializable; detection re-runs
-    * per attempt — see PartitionedSnapshots.optimisticDelete). The
-    * default stays the single-writer lock: predicate DML is usually
-    * maintenance (GDPR sweeps, backfills) where observing commit
-    * order beats concurrency. */
-  private def dmlOptimistic(spark: SparkSession): Boolean =
-    SnapshotSqlCatalog.dmlOptimistic(spark)
 
   override def runUpdate(spark: SparkSession,
       set: Map[String, org.apache.spark.sql.Column],
       where: org.apache.spark.sql.Column): Unit = {
-    if (dmlOptimistic(spark))
-      PartitionedSnapshots.optimisticUpdateWhere(spark, tablePath, set,
-        where, partCol, store = store)
-    else
-      PartitionedSnapshots.updateWhere(spark, tablePath, set, where,
-        partCol, store)
+    PartitionedSnapshots.updateWhere(spark, tablePath, set, where,
+      partCol, store)
     ()
   }
 
@@ -582,12 +560,8 @@ private[plans] class SnapshotWritableTable(
           s"unsupported DELETE filter: $f")))
       .reduceOption(_ && _)
       .getOrElse(org.apache.spark.sql.functions.lit(true))
-    if (dmlOptimistic(SparkSession.active))
-      PartitionedSnapshots.optimisticDelete(SparkSession.active,
-        tablePath, where, partCol, store = store)
-    else
-      PartitionedSnapshots.delete(SparkSession.active, tablePath, where,
-        partCol, store)
+    PartitionedSnapshots.delete(SparkSession.active, tablePath, where,
+      partCol, store)
     ()
   }
   override def capabilities(): java.util.Set[TableCapability] = {
@@ -666,16 +640,6 @@ object SnapshotSqlCatalog {
   import org.apache.spark.sql.Column
   import org.apache.spark.sql.functions.{col, lit, not}
   import org.apache.spark.sql.sources._
-
-  /** THE parser for the `graft.dml.optimistic` opt-in — shared by the
-    * DML door and the compact procedure so both doors accept/reject
-    * identically. LENIENT: anything other than (trimmed,
-    * case-insensitive) "true" reads as false — `SET
-    * graft.dml.optimistic=yes` routes serialized, it does not throw
-    * the raw `toBoolean` IllegalArgumentException at the user. */
-  private[plans] def dmlOptimistic(spark: SparkSession): Boolean =
-    spark.conf.getOption("graft.dml.optimistic")
-      .exists(_.trim.equalsIgnoreCase("true"))
 
   /** DSv1 Filter → Column for the DELETE push-through — the standard
     * translatable subset; None makes `canDeleteWhere` refuse up front. */

@@ -30,7 +30,7 @@ import org.apache.spark.sql.types.StructType
   *     and the result is a first-class version addressable via
   *     `VERSION AS OF`. Partitioned upsert/append epochs commit
   *     through the OPTIMISTIC protocol
-  *     ([[PartitionedSnapshots.optimisticUpsert]]): two streams
+  *     ([[PartitionedSnapshots.upsert]]): two streams
   *     writing disjoint partitions of one table interleave their
   *     epoch data writes instead of serializing on the table lock,
   *     and overlapping epochs converge by bounded retry. `Complete`
@@ -161,28 +161,18 @@ private[plans] final class SnapshotStreamingWrite(
         // the pointer flip exactly as on the locking path, and a
         // retried attempt re-prepares BEFORE committing, so the
         // marker never lands twice. RETRY EXHAUSTION falls back to
-        // the serializing path — a long-running query must always
-        // make progress, so sustained same-partition contention
-        // degrades an epoch to the pre-optimistic behavior (lock +
-        // serialize) instead of failing the stream.
-        case (Some(pc), ks) if ks.nonEmpty =>
-          try PartitionedSnapshots.optimisticUpsert(spark, tablePath,
-            batch, ks, pc, store = store, txn = txn)
+        // the same attempt run under the table lock, which cannot lose
+        // a race — a long-running query must always make progress, so
+        // sustained same-partition contention serializes an epoch
+        // instead of failing the stream. No keys = append.
+        case (Some(pc), ks) =>
+          try PartitionedSnapshots.upsert(spark, tablePath, batch, ks,
+            pc, store = store, txn = txn)
           catch {
             case _: graft.operators.Incremental.ConcurrentWriteException =>
               SnapshotStreamingWrite.serializedRetry {
-                PartitionedSnapshots.upsert(spark, tablePath, batch,
-                  ks, pc, store = store, txn = txn)
-              }
-          }
-        case (Some(pc), _) =>
-          try PartitionedSnapshots.optimisticAppend(spark, tablePath,
-            batch, pc, store = store, txn = txn)
-          catch {
-            case _: graft.operators.Incremental.ConcurrentWriteException =>
-              SnapshotStreamingWrite.serializedRetry {
-                PartitionedSnapshots.append(spark, tablePath, batch,
-                  pc, store = store, txn = txn)
+                PartitionedSnapshots.upsertUnderLock(spark, tablePath,
+                  batch, ks, pc, store, txn)
               }
           }
         // full-copy epochs stay serializing (a whole-version copy has
@@ -260,7 +250,7 @@ private[plans] object SnapshotStreamingWrite {
     writeSchema.fields.toSeq.filterNot(f =>
       tableSchema.fieldNames.exists(_.equalsIgnoreCase(f.name)))
 
-  /** Bounded backoff around the SERIALIZING fallback an epoch takes
+  /** Bounded backoff around the lock-held fallback an epoch takes
     * after optimistic-retry exhaustion: the single-writer lock is
     * non-blocking (contention throws), but epoch-commit lock holders
     * are transient, so a stream that already lost its optimistic

@@ -162,7 +162,7 @@ class FileManifestSpec extends AnyFunSuite {
     val t = tmp("fm_opt") + "/t"
     PS.write(spark, t, Seq((1L, "a", "x"), (2L, "b", "y"))
       .toDF("k", "d", "v"), "d", store)
-    val v = PS.optimisticUpsert(spark, t,
+    val v = PS.upsert(spark, t,
       Seq((3L, "c", "z")).toDF("k", "d", "v"), Seq("k"), "d",
       store = store)
     val fast = PS.readVersion(spark, t, v, store)

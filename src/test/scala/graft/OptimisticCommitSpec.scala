@@ -60,7 +60,7 @@ class OptimisticCommitSpec extends AnyFunSuite {
               OptimisticGates.bothPreparing.await(60, TimeUnit.SECONDS)
               r
             }.toDF("k", "d", "v")
-          PS.optimisticUpsert(spark, t, batch, Seq("k"), "d")
+          PS.upsert(spark, t, batch, Seq("k"), "d")
         }
       })
     val (fa, fb) = (writer("B", 2L), writer("C", 3L))
@@ -92,14 +92,14 @@ class OptimisticCommitSpec extends AnyFunSuite {
         val batch = Seq((2L, "P", "slow")).toDS
           .map { r => OptimisticGates.overlapGate.await(); r }
           .toDF("k", "d", "v")
-        PS.optimisticUpsert(spark, t, batch, Seq("k"), "d")
+        PS.upsert(spark, t, batch, Seq("k"), "d")
       }
     })
     // wait until the slow writer has RESERVED v2 (its prepare is in
     // flight), then land a fast overlapping commit on the same
     // partition — the slow writer's validation must now conflict
     awaitFile(s"$t/_snapshots/v00002/.reserved")
-    val fast = PS.optimisticUpsert(spark, t,
+    val fast = PS.upsert(spark, t,
       Seq((3L, "P", "fast")).toDF("k", "d", "v"), Seq("k"), "d")
     assert(fast == 3L, s"fast writer committed v$fast")
     OptimisticGates.overlapGate.countDown()
@@ -122,12 +122,12 @@ class OptimisticCommitSpec extends AnyFunSuite {
         val batch = Seq((2L, "P", "slow")).toDS
           .map { r => OptimisticGates.refuseGate.await(); r }
           .toDF("k", "d", "v")
-        PS.optimisticUpsert(spark, t, batch, Seq("k"), "d",
+        PS.upsert(spark, t, batch, Seq("k"), "d",
           maxRetries = 0)
       }
     })
     awaitFile(s"$t/_snapshots/v00002/.reserved")
-    PS.optimisticUpsert(spark, t,
+    PS.upsert(spark, t,
       Seq((3L, "P", "fast")).toDF("k", "d", "v"), Seq("k"), "d")
     OptimisticGates.refuseGate.countDown()
     val e = intercept[java.util.concurrent.ExecutionException] {
@@ -158,14 +158,14 @@ class OptimisticCommitSpec extends AnyFunSuite {
         val batch = Seq((2L, "B", "slow")).toDS
           .map { r => OptimisticGates.bareOwnerGate.await(); r }
           .toDF("k", "d", "v")
-        PS.optimisticUpsert(spark, t, batch, Seq("k"), "d")
+        PS.upsert(spark, t, batch, Seq("k"), "d")
       }
     })
     // slow writer holds reservation v2; a DISJOINT writer commits v3
     // first, so slow's validation passes but its number is behind the
     // pointer → it must commit as v4 with owner entries at v2
     awaitFile(s"$t/_snapshots/v00002/.reserved")
-    assert(PS.optimisticUpsert(spark, t,
+    assert(PS.upsert(spark, t,
       Seq((3L, "C", "fast")).toDF("k", "d", "v"), Seq("k"), "d") == 3L)
     OptimisticGates.bareOwnerGate.countDown()
     assert(slow.get(120, TimeUnit.SECONDS) == 4L)
@@ -241,7 +241,7 @@ class OptimisticCommitSpec extends AnyFunSuite {
       pool.submit(new java.util.concurrent.Callable[Long] {
         def call(): Long = {
           start.await()
-          PS.optimisticUpsert(spark, t,
+          PS.upsert(spark, t,
             Seq((w.toLong, s"P$w", s"writer_$w")).toDF("k", "d", "v"),
             Seq("k"), "d")
         }

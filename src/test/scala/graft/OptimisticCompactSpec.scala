@@ -45,7 +45,7 @@ class CompactGatedStore(inner: CommitStore) extends CommitStore {
   }
 }
 
-/** Round-15: optimistic opt-in for `compact` — the last maintenance
+/** Round-15: optimistic commits for `compact` — the last maintenance
   * writer still serializing its DATA phase on the table lock. The
   * conflict rule is the shared ownership diff (a compaction whose
   * fragmented partitions are untouched since its base commits
@@ -81,14 +81,14 @@ class OptimisticCompactSpec extends AnyFunSuite {
       "fragmented partition coalesced to one file, compact partition " +
       "carried, row set bit-identical; nothing fragmented → (cur, " +
       "Nil) burning no version; maxRecordsPerFile caps the rewrite") {
-    val ser = s"${tmp("ocmp_ser")}/t"
     val opt = s"${tmp("ocmp_opt")}/t"
-    seedFragmented(ser); seedFragmented(opt)
+    seedFragmented(opt)
     val before = rows(opt)
-    val (vSer, pSer) = PS.compact(spark, ser, "d")
-    val (vOpt, pOpt) = PS.optimisticCompact(spark, opt, "d")
-    assert(vSer == vOpt && pSer == pOpt && pOpt == Seq("__p=F"),
-      s"ser ($vSer, $pSer) vs opt ($vOpt, $pOpt)")
+    assert(before ==
+      Seq.tabulate(8)(i => (i.toLong, "F", s"f$i")).toSet +
+        ((100L, "C", "c")))
+    val (vOpt, pOpt) = PS.compact(spark, opt, "d")
+    assert(vOpt == 3L && pOpt == Seq("__p=F"), s"opt ($vOpt, $pOpt)")
     assert(files(opt, vOpt, "F") == 1, "compacted to one file")
     assert(rows(opt) == before, "row set is bit-identical")
     assert(PS.manifest(opt, vOpt) ==
@@ -101,14 +101,14 @@ class OptimisticCompactSpec extends AnyFunSuite {
     assert(refs.filter(_.part == "__p=F").forall(_.rows.isDefined),
       "rewritten files carry commit-recorded row counts")
     // nothing fragmented left → no-op at the current version
-    assert(PS.optimisticCompact(spark, opt, "d") == ((vOpt, Seq.empty)))
+    assert(PS.compact(spark, opt, "d") == ((vOpt, Seq.empty)))
     assert(PS.versions(opt).max == vOpt)
     // maxRecordsPerFile rolls the single task's output: 8 rows, cap 3
     val t2 = s"${tmp("ocmp_cap")}/t"
     PS.write(spark, t2,
       Seq.tabulate(8)(i => (i.toLong, "F", s"g$i"))
         .toDF("k", "d", "v").repartition(4), "d")
-    val (v2, p2) = PS.optimisticCompact(spark, t2, "d",
+    val (v2, p2) = PS.compact(spark, t2, "d",
       maxRecordsPerFile = 3)
     assert(p2 == Seq("__p=F"), p2.toString)
     assert(files(t2, v2, "F") == 3)
@@ -122,7 +122,7 @@ class OptimisticCompactSpec extends AnyFunSuite {
     val store = CommitStore.local
     val cur = PS.currentVersion(t, store).get
     store.delete(f"$t/_snapshots/v$cur%05d/filemeta")
-    val (v, parts) = PS.optimisticCompact(spark, t, "d")
+    val (v, parts) = PS.compact(spark, t, "d")
     assert(parts == Seq("__p=F"))
     assert(files(t, v, "F") == 1)
     assert(PS.read(spark, t).count() == 9)
@@ -140,13 +140,13 @@ class OptimisticCompactSpec extends AnyFunSuite {
     val cmp = pool.submit(
       new java.util.concurrent.Callable[(Long, Seq[String])] {
         def call(): (Long, Seq[String]) =
-          PS.optimisticCompact(spark, t, "d", store = gated)
+          PS.compact(spark, t, "d", store = gated)
       })
     assert(OptimisticCompactGates.parked.await(60, TimeUnit.SECONDS),
       "compaction never reached its data phase")
     // compaction is parked INSIDE its lock-free prepare; a writer to
     // a DISJOINT partition commits meanwhile — proof the lock is free
-    val vUp = PS.optimisticUpsert(spark, t,
+    val vUp = PS.upsert(spark, t,
       Seq((200L, "C", "upserted")).toDF("k", "d", "v"), Seq("k"), "d")
     OptimisticCompactGates.armed = false
     OptimisticCompactGates.release.countDown()
@@ -180,11 +180,11 @@ class OptimisticCompactSpec extends AnyFunSuite {
     val cmp = pool.submit(
       new java.util.concurrent.Callable[(Long, Seq[String])] {
         def call(): (Long, Seq[String]) =
-          PS.optimisticCompact(spark, t, "d", store = gated)
+          PS.compact(spark, t, "d", store = gated)
       })
     assert(OptimisticCompactGates.parked.await(60, TimeUnit.SECONDS))
     // winner rewrites the SAME fragmented partition, adding a row
-    val vUp = PS.optimisticUpsert(spark, t,
+    val vUp = PS.upsert(spark, t,
       Seq((9L, "F", "won")).toDF("k", "d", "v"), Seq("k"), "d")
     OptimisticCompactGates.armed = false
     OptimisticCompactGates.release.countDown()
@@ -214,11 +214,11 @@ class OptimisticCompactSpec extends AnyFunSuite {
     val cmp = pool.submit(
       new java.util.concurrent.Callable[(Long, Seq[String])] {
         def call(): (Long, Seq[String]) =
-          PS.optimisticCompact(spark, t, "d", maxRetries = 0,
+          PS.compact(spark, t, "d", maxRetries = 0,
             store = gated)
       })
     assert(OptimisticCompactGates.parked.await(60, TimeUnit.SECONDS))
-    PS.optimisticUpsert(spark, t,
+    PS.upsert(spark, t,
       Seq((9L, "F", "fast")).toDF("k", "d", "v"), Seq("k"), "d")
     OptimisticCompactGates.armed = false
     OptimisticCompactGates.release.countDown()
@@ -231,21 +231,17 @@ class OptimisticCompactSpec extends AnyFunSuite {
   }
 
   test("SQL: CALL system.compact routes through the optimistic " +
-      "commit under SET graft.dml.optimistic=true with identical " +
-      "semantics") {
+      "commit with identical semantics") {
     val root = Files.createTempDirectory("graft_ocmp_sql").toString
     spark.conf.set("spark.sql.catalog.ocmp",
       "graft.plans.SnapshotSqlCatalog")
     spark.conf.set("spark.sql.catalog.ocmp.root", root)
     val t = s"$root/t"
     seedFragmented(t)
-    spark.conf.set("graft.dml.optimistic", "true")
-    try {
-      val r = spark.sql(
-        "CALL ocmp.system.compact(table => 't')").collect()
-      assert(r.head.getLong(0) == 3L && r.head.getInt(1) == 1,
-        r.mkString)
-    } finally spark.conf.unset("graft.dml.optimistic")
+    val r = spark.sql(
+      "CALL ocmp.system.compact(table => 't')").collect()
+    assert(r.head.getLong(0) == 3L && r.head.getInt(1) == 1,
+      r.mkString)
     assert(files(t, 3L, "F") == 1)
     assert(rows(t) ==
       Seq.tabulate(8)(i => (i.toLong, "F", s"f$i")).toSet +

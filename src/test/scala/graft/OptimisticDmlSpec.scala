@@ -47,7 +47,7 @@ class DmlGatedStore(inner: CommitStore) extends CommitStore {
   }
 }
 
-/** Round-14: optimistic opt-in for predicate DELETE/UPDATE — the
+/** Round-14: optimistic commits for predicate DELETE/UPDATE — the
   * upsert-shaped maintenance writers (a partition-scoped GDPR delete)
   * no longer serialize their data phases on the table lock; the
   * conflict rule is the shared partition-granularity one, detection
@@ -67,28 +67,23 @@ class OptimisticDmlSpec extends AnyFunSuite {
       "matching rows gone, a fully-deleted partition leaves the " +
       "manifest, untouched partitions carry; a no-match predicate is " +
       "a no-op burning no version") {
-    def seed(t: String): Unit = PS.write(spark, t, Seq(
+    val opt = s"${tmp("odml_opt")}/t"
+    PS.write(spark, opt, Seq(
       (1L, "A", "del-1"), (2L, "A", "keep-2"),
       (3L, "B", "del-3"), (4L, "C", "keep-4"))
       .toDF("k", "d", "v"), "d")
-    val ser = s"${tmp("odml_ser")}/t"
-    val opt = s"${tmp("odml_opt")}/t"
-    seed(ser); seed(opt)
-    val vSer = PS.delete(spark, ser, col("v").startsWith("del"), "d")
-    val vOpt = PS.optimisticDelete(spark, opt,
-      col("v").startsWith("del"), "d")
-    assert(rows(ser) == rows(opt))
+    val vOpt = PS.delete(spark, opt, col("v").startsWith("del"), "d")
     assert(rows(opt) == Set((2L, "A", "keep-2"), (4L, "C", "keep-4")))
-    val (mSer, mOpt) = (PS.manifest(ser, vSer), PS.manifest(opt, vOpt))
+    val mOpt = PS.manifest(opt, vOpt)
     assert(!mOpt.contains("__p=B"), "emptied partition must drop")
-    assert(mSer.keySet == mOpt.keySet)
+    assert(mOpt.keySet == Set("__p=A", "__p=C"))
     assert(mOpt("__p=C") == 1L, "untouched partition carries its owner")
     // file manifest stays consistent → plan-from-metadata still serves
     assert(PS.fileManifest(opt, vOpt).get.map(_.part).toSet ==
       mOpt.keySet)
     // no-op: nothing matches → same version back, no commit burned
     val before = PS.versions(opt).size
-    assert(PS.optimisticDelete(spark, opt, col("v") === "absent",
+    assert(PS.delete(spark, opt, col("v") === "absent",
       "d") == vOpt)
     assert(PS.versions(opt).size == before)
   }
@@ -96,40 +91,31 @@ class OptimisticDmlSpec extends AnyFunSuite {
   test("three-valued logic: a NULL-predicate row in a TOUCHED " +
       "partition is KEPT by both delete paths (not silently dropped " +
       "by not(null))") {
-    def seed(t: String): Unit = PS.write(spark, t, Seq(
+    val opt = s"${tmp("odml_null_o")}/t"
+    PS.write(spark, opt, Seq(
       (1L, "A", Some("del")), (2L, "A", None), (3L, "A", Some("keep")))
       .toDF("k", "d", "v"), "d")
-    val ser = s"${tmp("odml_null_s")}/t"
-    val opt = s"${tmp("odml_null_o")}/t"
-    seed(ser); seed(opt)
     // v = 'del' is NULL for k=2 — SQL DELETE semantics: remove only
     // rows the predicate proves TRUE
-    PS.delete(spark, ser, col("v") === "del", "d")
-    PS.optimisticDelete(spark, opt, col("v") === "del", "d")
+    PS.delete(spark, opt, col("v") === "del", "d")
     def got(t: String) = PS.read(spark, t).select("k")
       .as[Long].collect().toSet
-    assert(got(ser) == Set(2L, 3L), s"serializing kept ${got(ser)}")
     assert(got(opt) == Set(2L, 3L), s"optimistic kept ${got(opt)}")
   }
 
   test("parity: optimisticUpdateWhere matches updateWhere — matched " +
       "rows updated, NULL-predicate rows untouched, other partitions " +
       "carried; no-match is a no-op") {
-    def seed(t: String): Unit = PS.write(spark, t, Seq(
+    val opt = s"${tmp("odml_uo")}/t"
+    PS.write(spark, opt, Seq(
       (1L, "A", "hit"), (2L, "A", "miss"), (3L, "B", "hit"))
       .toDF("k", "d", "v"), "d")
-    val ser = s"${tmp("odml_us")}/t"
-    val opt = s"${tmp("odml_uo")}/t"
-    seed(ser); seed(opt)
-    PS.updateWhere(spark, ser, Map("v" -> upper(col("v"))),
-      col("v") === "hit", "d")
-    val vOpt = PS.optimisticUpdateWhere(spark, opt,
+    val vOpt = PS.updateWhere(spark, opt,
       Map("v" -> upper(col("v"))), col("v") === "hit", "d")
-    assert(rows(ser) == rows(opt))
     assert(rows(opt) == Set((1L, "A", "HIT"), (2L, "A", "miss"),
       (3L, "B", "HIT")))
     val before = PS.versions(opt).size
-    assert(PS.optimisticUpdateWhere(spark, opt,
+    assert(PS.updateWhere(spark, opt,
       Map("v" -> lit("x")), col("v") === "absent", "d") == vOpt)
     assert(PS.versions(opt).size == before)
   }
@@ -145,7 +131,7 @@ class OptimisticDmlSpec extends AnyFunSuite {
     val pool = Executors.newFixedThreadPool(1)
     OptimisticDmlGates.armed = true
     val del = pool.submit(new java.util.concurrent.Callable[Long] {
-      def call(): Long = PS.optimisticDelete(spark, t,
+      def call(): Long = PS.delete(spark, t,
         col("d") === "A" && col("v").startsWith("del"), "d",
         store = gated)
     })
@@ -153,7 +139,7 @@ class OptimisticDmlSpec extends AnyFunSuite {
       "delete never reached its data phase")
     // delete is parked INSIDE its lock-free prepare; a writer to a
     // DISJOINT partition commits meanwhile — proof the lock is free
-    val vUp = PS.optimisticUpsert(spark, t,
+    val vUp = PS.upsert(spark, t,
       Seq((4L, "B", "upserted")).toDF("k", "d", "v"), Seq("k"), "d")
     OptimisticDmlGates.armed = false
     OptimisticDmlGates.release.countDown()
@@ -179,12 +165,12 @@ class OptimisticDmlSpec extends AnyFunSuite {
     val pool = Executors.newFixedThreadPool(1)
     OptimisticDmlGates.armed = true
     val del = pool.submit(new java.util.concurrent.Callable[Long] {
-      def call(): Long = PS.optimisticDelete(spark, t,
+      def call(): Long = PS.delete(spark, t,
         col("v").startsWith("del"), "d", store = gated)
     })
     assert(OptimisticDmlGates.parked.await(60, TimeUnit.SECONDS))
     // winner rewrites the SAME partition, adding another matching row
-    val vUp = PS.optimisticUpsert(spark, t,
+    val vUp = PS.upsert(spark, t,
       Seq((9L, "P", "del-9")).toDF("k", "d", "v"), Seq("k"), "d")
     OptimisticDmlGates.armed = false
     OptimisticDmlGates.release.countDown()
@@ -205,12 +191,12 @@ class OptimisticDmlSpec extends AnyFunSuite {
     val pool = Executors.newFixedThreadPool(1)
     OptimisticDmlGates.armed = true
     val del = pool.submit(new java.util.concurrent.Callable[Long] {
-      def call(): Long = PS.optimisticDelete(spark, t,
+      def call(): Long = PS.delete(spark, t,
         col("v").startsWith("del"), "d", maxRetries = 0,
         store = gated)
     })
     assert(OptimisticDmlGates.parked.await(60, TimeUnit.SECONDS))
-    PS.optimisticUpsert(spark, t,
+    PS.upsert(spark, t,
       Seq((2L, "P", "fast")).toDF("k", "d", "v"), Seq("k"), "d")
     OptimisticDmlGates.armed = false
     OptimisticDmlGates.release.countDown()
@@ -222,8 +208,8 @@ class OptimisticDmlSpec extends AnyFunSuite {
       e.getCause.getMessage)
   }
 
-  test("SQL UPDATE/DELETE opt into the optimistic commit via SET " +
-      "graft.dml.optimistic=true, with identical semantics") {
+  test("SQL UPDATE/DELETE commit through the optimistic protocol, " +
+      "with identical semantics") {
     val root = Files.createTempDirectory("graft_odml_sql").toString
     spark.conf.set("spark.sql.catalog.odml",
       "graft.plans.SnapshotSqlCatalog")
@@ -231,11 +217,8 @@ class OptimisticDmlSpec extends AnyFunSuite {
     val t = s"$root/t"
     PS.write(spark, t, Seq((1L, "A", "del-1"), (2L, "A", "keep-2"),
       (3L, "B", "hit")).toDF("k", "d", "v"), "d")
-    spark.conf.set("graft.dml.optimistic", "true")
-    try {
-      spark.sql("UPDATE odml.t SET v = upper(v) WHERE v = 'hit'")
-      spark.sql("DELETE FROM odml.t WHERE v = 'del-1'")
-    } finally spark.conf.unset("graft.dml.optimistic")
+    spark.sql("UPDATE odml.t SET v = upper(v) WHERE v = 'hit'")
+    spark.sql("DELETE FROM odml.t WHERE v = 'del-1'")
     assert(rows(t) == Set((2L, "A", "keep-2"), (3L, "B", "HIT")))
     assert(PS.currentVersion(t).contains(3L))
     // both commits carried consistent file manifests

@@ -36,11 +36,10 @@ class OptimisticMergeSpec extends AnyFunSuite {
   private def rows(t: String): Set[(Long, String, String)] =
     PS.read(spark, t).as[(Long, String, String)].collect().toSet
 
-  private def awaitFile(path: String, present: Boolean = true): Unit = {
+  private def awaitFile(path: String): Unit = {
     val deadline = System.currentTimeMillis() + 60000
-    while (Files.exists(Paths.get(path)) != present) {
-      assert(System.currentTimeMillis() < deadline,
-        s"never ${if (present) "appeared" else "went away"}: $path")
+    while (!Files.exists(Paths.get(path))) {
+      assert(System.currentTimeMillis() < deadline, s"never appeared: $path")
       Thread.sleep(20)
     }
   }
@@ -53,29 +52,16 @@ class OptimisticMergeSpec extends AnyFunSuite {
     val src = Seq((2L, "A", "updated"), (3L, "A", "del"),
       (9L, "A", "inserted"), (10L, "A", "skip-insert"))
       .toDF("k", "d", "v")
-    def run(t: String, optimistic: Boolean): Long = {
-      PS.write(spark, t, seed, "d")
-      val upd = Map("v" -> PS.source("v"))
-      val del = Some(PS.source("v") === "del")
-      val cond = Some(PS.source("v") =!= "skip-insert")
-      if (optimistic)
-        PS.optimisticMerge(spark, t, src, Seq("k"), "d",
-          whenMatchedUpdate = upd, whenMatchedDelete = del,
-          insertCond = cond)
-      else
-        PS.merge(spark, t, src, Seq("k"), "d",
-          whenMatchedUpdate = upd, whenMatchedDelete = del,
-          insertCond = cond)
-    }
     val tOpt = s"${tmp("omrg_parity")}/t"
-    val tLock = s"${tmp("omrg_parity_twin")}/t"
-    val vOpt = run(tOpt, optimistic = true)
-    val vLock = run(tLock, optimistic = false)
-    assert(vOpt == 2L && vLock == 2L)
+    PS.write(spark, tOpt, seed, "d")
+    val vOpt = PS.merge(spark, tOpt, src, Seq("k"), "d",
+      whenMatchedUpdate = Map("v" -> PS.source("v")),
+      whenMatchedDelete = Some(PS.source("v") === "del"),
+      insertCond = Some(PS.source("v") =!= "skip-insert"))
+    assert(vOpt == 2L)
     val expected = Set((1L, "A", "keep"), (2L, "A", "updated"),
       (9L, "A", "inserted"), (4L, "B", "other"))
     assert(rows(tOpt) == expected, s"optimistic: ${rows(tOpt)}")
-    assert(rows(tOpt) == rows(tLock))
     // untouched partition B carried over, not rewritten
     assert(PS.manifest(tOpt, 2L)("__p=B") == 1L)
     // pinned reader isolation
@@ -88,7 +74,7 @@ class OptimisticMergeSpec extends AnyFunSuite {
     val t = s"${tmp("omrg_empty")}/t"
     PS.write(spark, t, Seq((1L, "A", "gone"), (2L, "B", "stays"))
       .toDF("k", "d", "v"), "d")
-    val v = PS.optimisticMerge(spark, t,
+    val v = PS.merge(spark, t,
       Seq((1L, "A", "x")).toDF("k", "d", "v"), Seq("k"), "d",
       whenMatchedDelete = Some(lit(true)), insertNotMatched = false)
     assert(v == 2L)
@@ -119,7 +105,7 @@ class OptimisticMergeSpec extends AnyFunSuite {
             OptimisticMergeGates.bothPreparing.await(60, TimeUnit.SECONDS)
             r
           }.toDF("k", "d", "v")
-        PS.optimisticMerge(spark, t, src, Seq("k"), "d",
+        PS.merge(spark, t, src, Seq("k"), "d",
           whenMatchedUpdate = Map("v" -> PS.source("v")))
       }
     })
@@ -130,7 +116,7 @@ class OptimisticMergeSpec extends AnyFunSuite {
             OptimisticMergeGates.bothPreparing.await(60, TimeUnit.SECONDS)
             r
           }.toDF("k", "d", "v")
-        PS.optimisticUpsert(spark, t, batch, Seq("k"), "d")
+        PS.upsert(spark, t, batch, Seq("k"), "d")
       }
     })
     val (vm, vu) = (merger.get(120, TimeUnit.SECONDS),
@@ -154,13 +140,13 @@ class OptimisticMergeSpec extends AnyFunSuite {
         val src = Seq((1L, "P", "ignored")).toDS
           .map { r => OptimisticMergeGates.overlapGate.await(); r }
           .toDF("k", "d", "v")
-        PS.optimisticMerge(spark, t, src, Seq("k"), "d",
+        PS.merge(spark, t, src, Seq("k"), "d",
           whenMatchedUpdate =
             Map("v" -> concat(PS.target("v"), lit("+m"))))
       }
     })
     awaitFile(s"$t/_snapshots/v00002/.reserved")
-    val fast = PS.optimisticUpsert(spark, t,
+    val fast = PS.upsert(spark, t,
       Seq((1L, "P", "fast")).toDF("k", "d", "v"), Seq("k"), "d")
     assert(fast == 3L)
     OptimisticMergeGates.overlapGate.countDown()
@@ -182,13 +168,13 @@ class OptimisticMergeSpec extends AnyFunSuite {
         val src = Seq((1L, "P", "x")).toDS
           .map { r => OptimisticMergeGates.refuseGate.await(); r }
           .toDF("k", "d", "v")
-        PS.optimisticMerge(spark, t, src, Seq("k"), "d",
+        PS.merge(spark, t, src, Seq("k"), "d",
           whenMatchedUpdate = Map("v" -> PS.source("v")),
           maxRetries = 0)
       }
     })
     awaitFile(s"$t/_snapshots/v00002/.reserved")
-    PS.optimisticUpsert(spark, t,
+    PS.upsert(spark, t,
       Seq((1L, "P", "fast")).toDF("k", "d", "v"), Seq("k"), "d")
     OptimisticMergeGates.refuseGate.countDown()
     val e = intercept[java.util.concurrent.ExecutionException] {
@@ -241,7 +227,7 @@ class OptimisticMergeSpec extends AnyFunSuite {
     store.armed = true
     val slow = pool.submit(new java.util.concurrent.Callable[Long] {
       def call(): Long =
-        PS.optimisticMerge(spark, t,
+        PS.merge(spark, t,
           Seq((2L, "P", "violates")).toDF("k", "d", "v"), Seq("k"),
           "d", maxRetries = 0, store = store)
     })
@@ -270,7 +256,7 @@ class OptimisticMergeSpec extends AnyFunSuite {
     val t = s"${tmp("omrg_move")}/t"
     PS.write(spark, t, Seq((1L, "A", "x")).toDF("k", "d", "v"), "d")
     val e = intercept[IllegalStateException] {
-      PS.optimisticMerge(spark, t,
+      PS.merge(spark, t,
         Seq((1L, "A", "y")).toDF("k", "d", "v"), Seq("k"), "d",
         whenMatchedUpdate = Map("d" -> lit("Z")))
     }
@@ -283,7 +269,7 @@ class OptimisticMergeSpec extends AnyFunSuite {
       "(merge needs a target)") {
     val t = s"${tmp("omrg_nobase")}/t"
     val e = intercept[IllegalStateException] {
-      PS.optimisticMerge(spark, t,
+      PS.merge(spark, t,
         Seq((1L, "A", "x")).toDF("k", "d", "v"), Seq("k"), "d")
     }
     assert(e.getMessage.contains("no committed snapshot"), e.getMessage)
@@ -294,7 +280,7 @@ class OptimisticMergeSpec extends AnyFunSuite {
     val t = s"${tmp("omrg_evolve")}/t"
     PS.write(spark, t, Seq((1L, "A", "a"), (2L, "B", "b"))
       .toDF("k", "d", "v"), "d")
-    PS.optimisticMerge(spark, t,
+    PS.merge(spark, t,
       Seq((1L, "A", "a2", 7)).toDF("k", "d", "v", "extra"), Seq("k"),
       "d", whenMatchedUpdate = Map("v" -> PS.source("v"),
         "extra" -> PS.source("extra")),
@@ -304,8 +290,8 @@ class OptimisticMergeSpec extends AnyFunSuite {
     assert(got == Set((1L, "a2", Some(7)), (2L, "b", None)), s"$got")
   }
 
-  test("SQL MERGE INTO opts into the optimistic commit via SET " +
-      "graft.merge.optimistic=true, with identical clause semantics") {
+  test("SQL MERGE INTO commits through the optimistic protocol, with " +
+      "identical clause semantics") {
     val root = Files.createTempDirectory("graft_omrg_sql").toString
     spark.conf.set("spark.sql.catalog.snapm",
       "graft.plans.SnapshotSqlCatalog")
@@ -315,14 +301,11 @@ class OptimisticMergeSpec extends AnyFunSuite {
       (4L, "B", "other")).toDF("k", "d", "v"), "d")
     Seq((2L, "A", "updated"), (9L, "A", "inserted"))
       .toDF("k", "d", "v").createOrReplaceTempView("omrg_sql_src")
-    spark.conf.set("graft.merge.optimistic", "true")
-    try {
-      spark.sql("""
-        MERGE INTO snapm.mrg t USING omrg_sql_src s ON t.k = s.k
-        WHEN MATCHED THEN UPDATE SET v = s.v
-        WHEN NOT MATCHED THEN INSERT *
-      """)
-    } finally spark.conf.unset("graft.merge.optimistic")
+    spark.sql("""
+      MERGE INTO snapm.mrg t USING omrg_sql_src s ON t.k = s.k
+      WHEN MATCHED THEN UPDATE SET v = s.v
+      WHEN NOT MATCHED THEN INSERT *
+    """)
     assert(rows(t) == Set((1L, "A", "keep"), (2L, "A", "updated"),
       (9L, "A", "inserted"), (4L, "B", "other")))
     assert(PS.currentVersion(t).contains(2L))
@@ -344,16 +327,12 @@ class OptimisticMergeSpec extends AnyFunSuite {
         val src = Seq((1L, "P", "merged", "stringy")).toDS
           .map { r => OptimisticMergeGates.schemaGate.await(); r }
           .toDF("k", "d", "v", "x")
-        PS.optimisticMerge(spark, t, src, Seq("k"), "d",
+        PS.merge(spark, t, src, Seq("k"), "d",
           whenMatchedUpdate = Map("v" -> PS.source("v")),
           evolveSchema = true, maxRetries = 0)
       }
     })
     awaitFile(s"$t/_snapshots/v00002/.reserved")
-    // the preparer reserves under the table lock and frees it before
-    // evaluating the gated source; ALTER (which does not wait for a held
-    // lock) must land after that, not in the reservation's window
-    awaitFile(s"$t.__lock", present = false)
     PS.addColumn(spark, t, "x",
       org.apache.spark.sql.types.IntegerType)
     OptimisticMergeGates.schemaGate.countDown()

@@ -22,6 +22,24 @@ class PartitionedSnapshotsSpec extends AnyFunSuite {
     PS.read(spark, t).select("k", "d", "v")
       .as[(Long, String, String)].collect().toSet
 
+  test("a metadata-only writer waits out a held table lock: addColumn " +
+      "started while another holder keeps the lock ~200 ms succeeds " +
+      "once it is released") {
+    val t = tmpTable()
+    PS.write(spark, t, Seq((1L, "A", "a")).toDF("k", "d", "v"), "d")
+    // another writer's reservation or commit section holding the lock
+    val tok = graft.operators.Incremental.acquire(t)
+    val holder = new Thread(() => {
+      Thread.sleep(200)
+      graft.operators.Incremental.release(t, tok)
+    })
+    holder.start()
+    PS.addColumn(spark, t, "note", org.apache.spark.sql.types.StringType)
+    holder.join()
+    assert(PS.tableProps(t)("schema").contains("\"note\""))
+    assert(rows(t) == Set((1L, "A", "a")))
+  }
+
   test("upsert writes ONLY the touched partitions; untouched manifest" +
       " entries carry over and pinned readers stay isolated") {
     val t = tmpTable()

@@ -19,9 +19,7 @@ class PropertySpec extends AnyFunSuite {
 
   /** Deterministic stream of samples from a generator. */
   private def samples[A](g: Gen[A], n: Int): Seq[A] =
-    Iterator.iterate((g.pureApply(Gen.Parameters.default, seed), seed.next)) {
-      case (_, s) => (g.pureApply(Gen.Parameters.default, s), s.next)
-    }.map(_._1).take(n).toSeq
+    PropertySpec.seeds(seed).map(PropertySpec.draw(g, _)).take(n).toSeq
 
   private val token: Gen[String] =
     Gen.oneOf("key", "agg", "row", "scan", "slow", "fast", "table", "value")
@@ -358,4 +356,15 @@ class PropertySpec extends AnyFunSuite {
       } else assert(g.isEmpty)
     }
   }
+}
+
+/** The seeded sampler: a fixed chain of ScalaCheck seeds, one draw per
+  * seed, so every run of a suite sees the same samples. */
+object PropertySpec {
+  def seeds(seed: org.scalacheck.rng.Seed)
+      : Iterator[org.scalacheck.rng.Seed] =
+    Iterator.iterate(seed)(_.next)
+
+  def draw[A](g: Gen[A], s: org.scalacheck.rng.Seed): A =
+    g.pureApply(Gen.Parameters.default, s)
 }

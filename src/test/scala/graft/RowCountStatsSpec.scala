@@ -43,7 +43,7 @@ class RowCountStatsSpec extends AnyFunSuite {
     PS.upsert(spark, t, Seq((4L, "b", "w"), (5L, "c", "q"))
       .toDF("k", "d", "v"), Seq("k"), "d", store = store)
     assert(recorded(2L).contains(5L))
-    PS.optimisticUpsert(spark, t, Seq((6L, "a", "o"))
+    PS.upsert(spark, t, Seq((6L, "a", "o"))
       .toDF("k", "d", "v"), Seq("k"), "d", store = store)
     assert(recorded(3L).contains(6L))
     PS.delete(spark, t, col("k") === 2L, "d", store)

@@ -348,7 +348,7 @@ class StatsAtWriteSpec extends AnyFunSuite {
       PS.fileManifest(t, v, store).get.forall(_.stats.isDefined)
     }
     assert(allStatted())
-    PS.optimisticUpsert(spark, t, Seq((41L, "p1", "w"))
+    PS.upsert(spark, t, Seq((41L, "p1", "w"))
       .toDF("k", "d", "v"), Seq("k"), "d", store = store)
     assert(allStatted())
     PS.delete(spark, t, col("k") === 3L, "d", store)
@@ -364,11 +364,11 @@ class StatsAtWriteSpec extends AnyFunSuite {
     assert(allStatted())
     // the optimistic maintenance rewrite records them too — fragment
     // p1 first so the compaction has something to coalesce
-    PS.optimisticUpsert(spark, t, Seq((6L, "p1", "x"), (7L, "p1", "y"))
+    PS.upsert(spark, t, Seq((6L, "p1", "x"), (7L, "p1", "y"))
       .toDF("k", "d", "v").repartition(2), Seq("k"), "d",
       store = store)
     assert(allStatted())
-    PS.optimisticCompact(spark, t, "d", store = store)
+    PS.compact(spark, t, "d", store = store)
     assert(allStatted())
     // the final state still prunes and answers exactly
     val q = spark.sql("SELECT k FROM sawd.t WHERE k = 41")

@@ -9,7 +9,6 @@ sbt -batch package > /tmp/sbt_package.log 2>&1 || { tail -40 /tmp/sbt_package.lo
 JAR=$(ls target/scala-2.13/*.jar | head -1)
 rm -rf "$OUT"
 /opt/spark/bin/spark-submit \
-  --master "local[${SPARK_GRAFT_CPUS:-8}]" \
   --driver-memory 8g \
   --conf "spark.driver.extraJavaOptions=-XX:ReservedCodeCacheSize=1g" \
   --class graft.Verify "$JAR" "$SF" "$OUT" "${2:-}" 2> /tmp/verify_stderr.log \
