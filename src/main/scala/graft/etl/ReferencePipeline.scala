@@ -2,6 +2,8 @@ package graft.etl
 
 import graft.operators.{Incremental, Quality}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
+  LogicalRelation, PartitioningAwareFileIndex}
 import org.apache.spark.sql.functions._
 
 /** Full-DAG materializing runner for the reference's 16-model dbt project
@@ -25,8 +27,10 @@ import org.apache.spark.sql.functions._
   * Scale notes: each hop reads only materialized parquet + the 1-day
   * window slice; the upserts shuffle on unique keys over that sliver, and
   * fact_events' dynamic partition overwrite never rewrites cold dates.
-  * Re-running with no new bronze data is a no-op (delete+insert replaces
-  * rows with identical recomputations).
+  * Re-running with no new bronze data is a no-op that reads no rows
+  * outside the check gates: every incremental model proves its sliver
+  * empty, from its source's file listing when that is unchanged, and is
+  * skipped, and every table model sees unchanged upstreams (see `run`).
   */
 final class ReferencePipeline(spark: SparkSession, baseDir: String,
     store: graft.operators.CommitStore = graft.operators.CommitStore.local,
@@ -41,12 +45,23 @@ final class ReferencePipeline(spark: SparkSession, baseDir: String,
   /** Arrival-tracked sliver for `model`'s source (no-op pass-through
     * when sliver narrowing is disabled). `slack` re-admits an hour of
     * bounded arrival disorder — delete+insert idempotence makes the
-    * overlap free in correctness and cheap in IO. */
-  private def sliverOf(source: DataFrame, model: String,
-      arrivalCol: String): inc.Sliver =
-    if (sliver) inc.sliverWindow(source, modelPaths(model), arrivalCol,
-      slack = "1 HOUR")
-    else inc.Sliver(source, narrowed = false, advance = () => ())
+    * overlap free in correctness and cheap in IO. `listing`, the
+    * source's file-listing fingerprint, is evaluated before `source`
+    * (see [[Incremental.sliverWindow]]'s listing proof). */
+  private def sliverOf(source: => DataFrame, model: String,
+      listing: => Option[String]): inc.Sliver =
+    if (sliver) inc.sliverWindow(source, modelPaths(model),
+      "pipeline_ingested_at", slack = "1 HOUR", listing = listing)
+    else new inc.Sliver(source, narrowed = false, empty = false,
+      advance = () => ())
+
+  /** Sliver of a model read from another model's materialization. */
+  private def modelSliver(upstream: String, model: String): inc.Sliver =
+    sliverOf(table(upstream), model, Some(listingFp(upstream)))
+
+  /** Sliver of a model read from a bronze frame the caller built. */
+  private def bronzeSliver(bronze: DataFrame, model: String): inc.Sliver =
+    sliverOf(bronze, model, fileIndexFp(bronze))
 
   val modelPaths: Map[String, String] = Map(
     "stg_clickstream_events" -> s"$baseDir/staging/stg_clickstream_events",
@@ -72,6 +87,44 @@ final class ReferencePipeline(spark: SparkSession, baseDir: String,
     * mixed footers after an append_new_columns evolution). */
   def table(name: String): DataFrame =
     spark.read.option("mergeSchema", "true").parquet(modelPaths(name))
+
+  /** Fingerprint of a model's file listing: every file's table-
+    * RELATIVE path and size (two layouts holding same-named, same-sized
+    * files in different subdirs must fingerprint differently, round-10
+    * ADVICE #1). The dir-swap materializer gives every changed write new
+    * uuid-named files while no-op re-admits leave the files untouched,
+    * so the fingerprint moves exactly when content does. */
+  private def listingFp(name: String): String = {
+    def walk(dir: String, prefix: String): Seq[String] =
+      store.listEntries(dir).sortBy(_.name).flatMap { e =>
+        if (e.isDir) walk(s"$dir/${e.name}", s"$prefix${e.name}/")
+        else Seq(s"$prefix${e.name}:${e.bytes}")
+      }
+    digest(walk(modelPaths(name), ""))
+  }
+
+  /** The same fingerprint over a frame's own file index — the files its
+    * scan reads, listed when the frame was built — plus its read schema.
+    * None unless the frame is a bare file scan: anything on top of the
+    * relation could change its rows while the files stay put. */
+  private def fileIndexFp(df: DataFrame): Option[String] =
+    Some(df.queryExecution.analyzed).collect {
+      case lr: LogicalRelation => lr.relation
+    }.collect { case r: HadoopFsRelation => r.location }.collect {
+      case idx: PartitioningAwareFileIndex =>
+        val roots = idx.rootPaths.map(_.toString + "/")
+        digest(df.schema.json +: idx.allFiles().map { f =>
+          val path = f.getPath.toString
+          val rel = roots.find(path.startsWith).fold(path)(r =>
+            path.drop(r.length))
+          s"$rel:${f.getLen}"
+        }.sorted)
+    }
+
+  private def digest(entries: Seq[String]): String =
+    java.util.Base64.getEncoder.encodeToString(
+      java.security.MessageDigest.getInstance("MD5")
+        .digest(entries.mkString("\n").getBytes("UTF-8")))
 
   private def overwrite(name: String, df: DataFrame): Unit =
     df.write.mode(SaveMode.Overwrite).parquet(modelPaths(name))
@@ -99,71 +152,86 @@ final class ReferencePipeline(spark: SparkSession, baseDir: String,
     * orders) via semi-joins on the upstream slivers. A missing sidecar
     * (first run, crash recovery, `sliver = false`) falls back to the
     * reference's full-overlap window — that path stays the correctness
-    * anchor and remains spec-covered. */
+    * anchor and remains spec-covered.
+    *
+    * Re-running with no new bronze data costs no Spark job outside the
+    * two check gates. Each incremental model whose sliver is provably
+    * empty — usually from its source's file listing alone: the bronze
+    * frame's file index, or the upstream model's files — is skipped
+    * outright (no lookback scan, no upsert), `fact_sessions` is skipped
+    * when both slivers that feed it are, and the change-gated table
+    * models see unchanged upstream listings. */
   def run(bronzeEvents: DataFrame, bronzeOrders: DataFrame)
       : Seq[Quality.CheckResult] = {
+    val changed = scala.collection.mutable.Set.empty[String]
+    // One incremental model: skipped when its sliver is provably empty
+    // and its target exists, else `materialize` upserts the sliver
+    // (returning whether the target changed). The sliver advances after
+    // that commit unless the caller defers it.
+    def skipped(name: String, why: String): Unit =
+      System.err.println(f"   [dbt] $name%-34s skipped ($why)")
+    def incremental(name: String, s: inc.Sliver, advance: Boolean = true)(
+        materialize: DataFrame => Boolean): Unit = {
+      if (s.empty && store.exists(modelPaths(name)))
+        skipped(name, "sliver provably empty")
+      else timed(name) { if (materialize(s.df)) changed += name }
+      if (advance) s.advance()
+    }
+
     // ── staging (incremental delete+insert, arrival-sliver narrowed) ──
     // stg_clickstream_events is the volume model: partition-granular
     // delete+insert on its own event_date column, so a steady-state run
     // rewrites only the dates the sliver touches (the same
     // materialization fact_events always had), not the whole table
-    val evSliver = sliverOf(bronzeEvents, "stg_clickstream_events",
-      "pipeline_ingested_at")
-    val changed = scala.collection.mutable.Set.empty[String]
-    def record(name: String, didChange: Boolean): Unit =
-      if (didChange) { changed += name; () }
-    timed("stg_clickstream_events") {
-      record("stg_clickstream_events",
-        inc.upsertPartitioned(modelPaths("stg_clickstream_events"),
-          stgClickstreamEvents(
-            inc.lateWindow(evSliver.df, modelPaths("stg_clickstream_events"),
-              "pipeline_ingested_at")),
-          Seq("event_id"), "event_date"))
-      evSliver.advance()
+    incremental("stg_clickstream_events",
+        bronzeSliver(bronzeEvents, "stg_clickstream_events")) { df =>
+      inc.upsertPartitioned(modelPaths("stg_clickstream_events"),
+        stgClickstreamEvents(inc.lateWindow(df,
+          modelPaths("stg_clickstream_events"), "pipeline_ingested_at")),
+        Seq("event_id"), "event_date")
     }
+    // fact_sessions has no sidecar of its own: it narrows to the
+    // sessions its two feeding slivers touched. So those two advance
+    // only after fact_sessions commits — a run dying in between re-admits
+    // them next time (idempotent) instead of losing the touched sessions.
     // stg_clickstream_sessions.sql:14-19: events at-or-after the target's
     // max(session_end_ts) - 1 day (window column differs per side);
     // sliver-narrowed to sessions that actually received new events
-    val stgEv = table("stg_clickstream_events")
+    lazy val stgEv = table("stg_clickstream_events")
     val sessSliver = sliverOf(stgEv, "stg_clickstream_sessions",
-      "pipeline_ingested_at")
-    val refWindow = inc.watermark(modelPaths("stg_clickstream_sessions"),
-        "session_end_ts", "1 DAY")
-      .map(wm => stgEv.filter(col("event_ts") >= lit(wm)))
-      .getOrElse(stgEv)
-    val sessSrc =
-      if (sessSliver.narrowed)
-        refWindow.join(sessSliver.df.select("session_id").distinct(),
-          Seq("session_id"), "left_semi")
-      else refWindow
-    // materialized when narrowing: the recomputed-session ids feed
-    // fact_sessions' narrowing below, and must be pinned BEFORE the
-    // upsert swaps the source files out from under the lazy plan
-    val sessUpdates =
-      if (sessSliver.narrowed) stgClickstreamSessions(sessSrc).localCheckpoint()
-      else stgClickstreamSessions(sessSrc)
-    timed("stg_clickstream_sessions") {
-      record("stg_clickstream_sessions",
-        upsert("stg_clickstream_sessions", Seq("session_id"), sessUpdates))
-      sessSliver.advance()
+      Some(listingFp("stg_clickstream_events")))
+    // the recomputed sessions, for fact_sessions' narrowing below
+    var sessUpdates: Option[DataFrame] = None
+    incremental("stg_clickstream_sessions", sessSliver,
+        advance = false) { df =>
+      val refWindow = inc.watermark(modelPaths("stg_clickstream_sessions"),
+          "session_end_ts", "1 DAY")
+        .map(wm => stgEv.filter(col("event_ts") >= lit(wm)))
+        .getOrElse(stgEv)
+      val sessSrc =
+        if (sessSliver.narrowed)
+          refWindow.join(df.select("session_id").distinct(),
+            Seq("session_id"), "left_semi")
+        else refWindow
+      // materialized when narrowing: pinned BEFORE the upsert swaps the
+      // source files out from under the lazy plan
+      val u =
+        if (sessSliver.narrowed) stgClickstreamSessions(sessSrc).localCheckpoint()
+        else stgClickstreamSessions(sessSrc)
+      sessUpdates = Some(u)
+      upsert("stg_clickstream_sessions", Seq("session_id"), u)
     }
-    val ordSliver = sliverOf(bronzeOrders, "stg_orders",
-      "pipeline_ingested_at")
-    timed("stg_orders") {
-      record("stg_orders",
-        upsert("stg_orders", Seq("order_id"),
-          stgOrders(inc.lateWindow(ordSliver.df, modelPaths("stg_orders"),
-            "pipeline_ingested_at"))))
-      ordSliver.advance()
+    val ordSliver = bronzeSliver(bronzeOrders, "stg_orders")
+    incremental("stg_orders", ordSliver, advance = false) { df =>
+      upsert("stg_orders", Seq("order_id"),
+        stgOrders(inc.lateWindow(df, modelPaths("stg_orders"),
+          "pipeline_ingested_at")))
     }
-    timed("stg_order_items") {
-      val s = sliverOf(table("stg_orders"), "stg_order_items",
-        "pipeline_ingested_at")
-      record("stg_order_items",
-        upsert("stg_order_items", Seq("order_id", "product_id"),
-          stgOrderItems(inc.lateWindow(s.df,
-            modelPaths("stg_order_items"), "pipeline_ingested_at"))))
-      s.advance()
+    incremental("stg_order_items",
+        modelSliver("stg_orders", "stg_order_items")) { df =>
+      upsert("stg_order_items", Seq("order_id", "product_id"),
+        stgOrderItems(inc.lateWindow(df, modelPaths("stg_order_items"),
+          "pipeline_ingested_at")))
     }
 
     val stagingResults = timed("staging schema tests") {
@@ -171,35 +239,27 @@ final class ReferencePipeline(spark: SparkSession, baseDir: String,
     }
 
     // ── facts (incremental; fact_events partitioned by event_date) ──
-    timed("fact_events") {
-      val s = sliverOf(table("stg_clickstream_events"), "fact_events",
-        "pipeline_ingested_at")
-      record("fact_events",
-        inc.upsertPartitioned(modelPaths("fact_events"),
-          factEvents(inc.lateWindow(s.df,
-            modelPaths("fact_events"), "event_ts")),
-          Seq("event_id"), "event_date"))
-      s.advance()
+    incremental("fact_events",
+        modelSliver("stg_clickstream_events", "fact_events")) { df =>
+      inc.upsertPartitioned(modelPaths("fact_events"),
+        factEvents(inc.lateWindow(df, modelPaths("fact_events"), "event_ts")),
+        Seq("event_id"), "event_date")
     }
-    timed("fact_orders") {
-      val s = sliverOf(table("stg_orders"), "fact_orders",
-        "pipeline_ingested_at")
-      record("fact_orders",
-        upsert("fact_orders", Seq("order_id"),
-          factOrders(inc.lateWindow(s.df,
-            modelPaths("fact_orders"), "order_ts"))))
-      s.advance()
+    incremental("fact_orders", modelSliver("stg_orders", "fact_orders")) {
+        df =>
+      upsert("fact_orders", Seq("order_id"),
+        factOrders(inc.lateWindow(df, modelPaths("fact_orders"), "order_ts")))
     }
-    timed("fact_order_items") {
-      val s = sliverOf(table("stg_order_items"), "fact_order_items",
-        "pipeline_ingested_at")
-      record("fact_order_items",
-        upsert("fact_order_items", Seq("order_id", "product_id"),
-          factOrderItems(inc.lateWindow(s.df,
-            modelPaths("fact_order_items"), "order_ts"))))
-      s.advance()
+    incremental("fact_order_items",
+        modelSliver("stg_order_items", "fact_order_items")) { df =>
+      upsert("fact_order_items", Seq("order_id", "product_id"),
+        factOrderItems(inc.lateWindow(df, modelPaths("fact_order_items"),
+          "order_ts")))
     }
-    timed("fact_sessions") {
+    if (sessSliver.empty && ordSliver.empty &&
+        store.exists(modelPaths("fact_sessions")))
+      skipped("fact_sessions", "both feeding slivers provably empty")
+    else timed("fact_sessions") {
       // touched sessions = recomputed upstream ∪ sessions of newly-
       // arrived orders (an order landing in an OLD session must still
       // refresh that session's rollup row)
@@ -207,16 +267,18 @@ final class ReferencePipeline(spark: SparkSession, baseDir: String,
         modelPaths("fact_sessions"), "session_start_ts")
       val fsSrc =
         if (sessSliver.narrowed && ordSliver.narrowed)
-          fsRef.join(sessUpdates.select("session_id")
-              .unionByName(ordSliver.df.select("session_id")
+          fsRef.join((sessUpdates.map(_.select("session_id")).toSeq :+
+              ordSliver.df.select("session_id")
                 .filter(col("session_id").isNotNull))
-              .distinct(),
+              .reduce(_ unionByName _).distinct(),
             Seq("session_id"), "left_semi")
         else fsRef
-      record("fact_sessions",
-        upsert("fact_sessions", Seq("session_id"),
+      if (upsert("fact_sessions", Seq("session_id"),
           factSessions(fsSrc, table("stg_orders"))))
+        changed += "fact_sessions"
     }
+    sessSliver.advance()
+    ordSliver.advance()
 
     // ── dimensions + metrics (table, change-gated) ──
     // A `table` materialization is a pure function of its inputs, so a
@@ -241,19 +303,6 @@ final class ReferencePipeline(spark: SparkSession, baseDir: String,
     // crash between upsert and flag write.) Sidecar written AFTER the
     // overwrite: a crash between them only costs one spurious rebuild.
     def depsPath(name: String) = modelPaths(name) + ".__deps"
-    def listingFp(name: String): String = {
-      // entries carry their table-RELATIVE path, not just the leaf name:
-      // two layouts holding same-named, same-sized files in different
-      // subdirs must fingerprint differently (round-10 ADVICE #1)
-      def walk(dir: String, prefix: String): Seq[String] =
-        store.listEntries(dir).sortBy(_.name).flatMap { e =>
-          if (e.isDir) walk(s"$dir/${e.name}", s"$prefix${e.name}/")
-          else Seq(s"$prefix${e.name}:${e.bytes}")
-        }
-      val md = java.security.MessageDigest.getInstance("MD5")
-      java.util.Base64.getEncoder.encodeToString(md.digest(
-        walk(modelPaths(name), "").mkString("\n").getBytes("UTF-8")))
-    }
     def tableModel(name: String, upstream: Seq[String])(
         build: => DataFrame): Unit = {
       // in-memory `changed` is the fast path (skip the listings when
@@ -270,8 +319,8 @@ final class ReferencePipeline(spark: SparkSession, baseDir: String,
       val prev = sig.flatMap(_ =>
         store.read(depsPath(name)).map(new String(_, "UTF-8")))
       val skip = sig.isDefined && prev == sig
-      if (skip) System.err.println(f"   [dbt] $name%-34s skipped " +
-        s"(upstreams unchanged: ${upstream.mkString(",")})")
+      if (skip)
+        skipped(name, s"upstreams unchanged: ${upstream.mkString(",")}")
       else {
         overwrite(name, build); changed += name
         store.write(depsPath(name),

@@ -47,7 +47,7 @@ object Constraints {
       store: CommitStore = CommitStore.local): Unit = {
     require(name.nonEmpty && name.matches("[A-Za-z0-9_]+"),
       s"constraint name must be [A-Za-z0-9_]+, got '$name'")
-    Incremental.withLock(t, Incremental.DefaultLockStaleMs, store) {
+    Incremental.withCommitLock(t, store) {
       if (list(t, store).contains(name))
         throw new IllegalStateException(
           s"constraint '$name' already exists on $t — drop it first")
@@ -78,7 +78,7 @@ object Constraints {
   /** Drop a recorded constraint (no-op if absent). */
   def drop(t: String, name: String,
       store: CommitStore = CommitStore.local): Unit =
-    Incremental.withLock(t, Incremental.DefaultLockStaleMs, store) {
+    Incremental.withCommitLock(t, store) {
       PartitionedSnapshots.updateProps(t, Map.empty,
         remove = Seq(Prefix + name), store = store)
     }
@@ -143,7 +143,7 @@ object GeneratedColumns {
       exprStr: String, store: CommitStore = CommitStore.local): Unit = {
     require(colName.nonEmpty && colName.matches("[A-Za-z0-9_]+"),
       s"column name must be [A-Za-z0-9_]+, got '$colName'")
-    Incremental.withLock(t, Incremental.DefaultLockStaleMs, store) {
+    Incremental.withCommitLock(t, store) {
       if (list(t, store).contains(colName))
         throw new IllegalStateException(
           s"generated column '$colName' already recorded on $t")
@@ -176,7 +176,7 @@ object GeneratedColumns {
     * stays; it just stops being derived/validated). */
   def drop(t: String, colName: String,
       store: CommitStore = CommitStore.local): Unit =
-    Incremental.withLock(t, Incremental.DefaultLockStaleMs, store) {
+    Incremental.withCommitLock(t, store) {
       PartitionedSnapshots.updateProps(t, Map.empty,
         remove = Seq(Prefix + colName), store = store)
     }

@@ -69,6 +69,13 @@ object Incremental {
     throw new IllegalStateException("unreachable")
   }
 
+  /** A consumer's sidecar: the arrival high mark it processed through,
+    * the content signature of the slack re-admit window as of that mark
+    * (round-9), and the fingerprint of the source's file listing the
+    * mark was computed over, when the caller gave one. */
+  private final case class Sidecar(mark: java.sql.Timestamp,
+      sig: Option[String], listing: Option[String])
+
   private[graft] def lockPath(target: Path): Path =
     java.nio.file.Paths.get(target.toString + ".__lock")
 
@@ -276,6 +283,23 @@ object Incremental {
   private[graft] def withLock[A](target: Path)(body: => A): A =
     withLock(target.toString, DefaultLockStaleMs, CommitStore.local)(body)
 
+  /** [[withLock]] for writers whose lock section is short. The lock is
+    * NON-blocking ([[acquire]] throws on contention — the right contract
+    * for long data-writing holders, where queueing would hide a stall).
+    * A DML writer's reserve and commit sections, and every writer whose
+    * lock section holds only metadata work (publish, initTable,
+    * addColumn, the stats and index prop setters, constraints,
+    * generated columns, tags), last milliseconds, so contention there is
+    * transient by construction: spin with exponential backoff until the
+    * lock frees, bounded by the staleness horizon (a holder older than
+    * that is stolen by acquire itself). This is what lets N racing
+    * writers all commit instead of all-but-one refusing at the lock. */
+  private[graft] def withCommitLock[A](target: String, store: CommitStore)
+      (body: => A): A =
+    spinOnContention() {
+      withLock(target, DefaultLockStaleMs, store)(body)
+    }
+
   /** input_file_name() returns a URI string; normalize `file:` URIs back
     * to local paths (the local store's currency) and keep other schemes
     * as-is (the Hadoop store resolves them by scheme). Shared by the
@@ -372,20 +396,23 @@ final class Incremental(spark: SparkSession,
   /** A processed-through SLIVER of a source (see [[sliverWindow]]):
     * `df` is the narrowed source, `narrowed` says whether a recorded
     * high-watermark actually applied (false = full-overlap fallback),
-    * and `advance()` — called AFTER the consuming materialization
-    * commits — records the new high mark for the next run. */
-  final case class Sliver(df: DataFrame, narrowed: Boolean,
-      advance: () => Unit)
+    * `empty` that the sliver provably holds nothing the consumer has not
+    * already processed (its `df` then has no rows), and `advance()` —
+    * called AFTER the consuming materialization commits, or in place of
+    * it when the consumer skips an empty sliver — records the new high
+    * mark for the next run. `df` is built on first use, so a sliver
+    * proved empty from its source's listing never reads the source. */
+  final class Sliver(source: => DataFrame, val narrowed: Boolean,
+      val empty: Boolean, val advance: () => Unit) {
+    lazy val df: DataFrame = source
+  }
 
   private def wmPath(targetPath: String) = targetPath + ".__wm"
 
-  /** Sidecar fields: recorded arrival high mark, plus (round-9) the
-    * content signature of the slack re-admit window as of that mark —
-    * what lets the next run prove "nothing new" without re-processing
-    * the window. A sidecar recorded for a different column reads as
-    * absent entirely. */
+  /** The sidecar recorded for `targetPath`; one recorded for a different
+    * column reads as absent entirely. */
   private def sidecarOf(targetPath: String, arrivalCol: String)
-      : Option[(java.sql.Timestamp, Option[String])] =
+      : Option[Incremental.Sidecar] =
     store.read(wmPath(targetPath)).flatMap { b =>
       val kv = new String(b, "UTF-8").split("\n")
         .filter(_.contains("=")).map { l =>
@@ -397,7 +424,8 @@ final class Incremental(spark: SparkSession,
         java.sql.Timestamp.from(
           java.time.Instant.EPOCH.plus(m.toLong,
             java.time.temporal.ChronoUnit.MICROS))
-      }.toOption).map(ts => (ts, kv.get("sig")))
+      }.toOption).map(ts =>
+        Incremental.Sidecar(ts, kv.get("sig"), kv.get("fp")))
     }
 
   /** The arrival high-watermark recorded for `targetPath`'s consumer by
@@ -406,7 +434,7 @@ final class Incremental(spark: SparkSession,
     * full-overlap window, which is always correct). */
   def processedThrough(targetPath: String,
       arrivalCol: String): Option[java.sql.Timestamp] =
-    sidecarOf(targetPath, arrivalCol).map(_._1)
+    sidecarOf(targetPath, arrivalCol).map(_.mark)
 
   /** ARRIVAL-TRACKED sliver window — the day-2 steady-state
     * optimization over the pure lookback contract. The dbt-style
@@ -432,18 +460,45 @@ final class Incremental(spark: SparkSession,
     * outside the sliver are below `previous - slack` by construction,
     * so scanning only the sliver for the new max is exact.
     *
+    * "Nothing new" is proved in two steps, cheapest first, and yields
+    * an `empty` sliver the consumer may skip outright:
+    *  - LISTING PROOF: `listing` is a fingerprint of the source's file
+    *    listing (relative paths and sizes), which the sidecar records
+    *    next to the mark. When it equals the recorded one, the source
+    *    holds exactly the files the recorded mark was computed over, so
+    *    the sliver is empty with no Spark job and without building
+    *    `source` at all. The caller takes the listing BEFORE the sliver
+    *    scans the source, so the recorded fingerprint never covers more
+    *    than the scan read: a file that lands (or is replaced) in
+    *    between is read but not fingerprinted, the next run's listing
+    *    differs from the recorded one, and that run falls through to
+    *    the row proof (under-crediting, never a loss).
+    *  - ROW PROOF: otherwise one aggregate over the sliver computes the
+    *    new max and the re-admit window's signature (see below).
+    *
     * Narrowing composes with (does not replace) the model's reference
     * lookback filter: apply [[lateWindow]] on `Sliver.df` — the
     * effective window is the INTERSECTION, so rows the reference
     * contract would drop are still dropped. */
-  def sliverWindow(source: DataFrame, targetPath: String,
-      arrivalCol: String, slack: String = "1 HOUR"): Sliver = {
+  def sliverWindow(source: => DataFrame, targetPath: String,
+      arrivalCol: String, slack: String = "1 HOUR",
+      listing: Option[String] = None): Sliver = {
+    lazy val src = source // built at most once, and only when needed
     val sidecar = sidecarOf(targetPath, arrivalCol)
-    val prev = sidecar.map(_._1)
-    val df = prev match {
-      case Some(p) => source.filter(col(arrivalCol).cast("timestamp") >=
-        lit(p) - expr(s"INTERVAL $slack"))
-      case None => source
+    def record(mark: java.sql.Timestamp, sig: String): Unit = {
+      val micros = java.time.temporal.ChronoUnit.MICROS
+        .between(java.time.Instant.EPOCH, mark.toInstant)
+      store.write(wmPath(targetPath),
+        (s"col=$arrivalCol\nmicros=$micros\nsig=$sig" +
+          listing.fold("")(l => s"\nfp=$l")).getBytes("UTF-8"))
+    }
+    if (listing.isDefined && sidecar.exists(_.listing == listing))
+      return new Sliver(src.limit(0), narrowed = true, empty = true,
+        advance = () => ())
+    val df = sidecar match {
+      case Some(sc) => src.filter(col(arrivalCol).cast("timestamp") >=
+        lit(sc.mark) - expr(s"INTERVAL $slack"))
+      case None => src
     }
     // All marks and signatures are computed HERE, at sliver creation —
     // strictly BEFORE the consuming materialization lists the source —
@@ -464,12 +519,11 @@ final class Incremental(spark: SparkSession,
     // window as of the recorded mark; the next run recomputes that
     // signature in its creation pass and, when the mark has not
     // advanced AND the window's content is bit-identical, the sliver is
-    // PROVABLY empty — the consumer gets zero rows and its upsert
-    // no-ops without reading the window's transforms at all. A late-
-    // listed row INSIDE the window changes the signature and restores
-    // the full re-admit; a legacy sidecar (no sig) always re-admits.
-    // Null anchoring matches contentSig: isNull flags interleave so a
-    // null-swap can never alias.
+    // PROVABLY empty — the consumer gets zero rows and may skip its
+    // materialization. A late-listed row INSIDE the window changes the
+    // signature and restores the full re-admit; a legacy sidecar (no
+    // sig) always re-admits. Null anchoring matches contentSig: isNull
+    // flags interleave so a null-swap can never alias.
     val rowHash = xxhash64(df.columns.toSeq.flatMap(c =>
         Seq(col(c).isNull, col(c))): _*)
       .cast(org.apache.spark.sql.types.DecimalType(38, 0))
@@ -481,14 +535,9 @@ final class Incremental(spark: SparkSession,
         .agg(count(lit(1)), sum(rowHash)).first()
       sigStr(r.getLong(0), r.get(1))
     }
-    def record(mark: java.sql.Timestamp, sig: String): Unit = {
-      val micros = java.time.temporal.ChronoUnit.MICROS
-        .between(java.time.Instant.EPOCH, mark.toInstant)
-      store.write(wmPath(targetPath),
-        s"col=$arrivalCol\nmicros=$micros\nsig=$sig".getBytes("UTF-8"))
-    }
-    prev match {
-      case Some(p) =>
+    sidecar match {
+      case Some(sc) =>
+        val p = sc.mark
         // one narrow pass: new max + the old window's signature
         val oldWin = col(arrivalCol).cast("timestamp") <= lit(p)
         val r = df.agg(
@@ -498,9 +547,13 @@ final class Incremental(spark: SparkSession,
         val mx = if (r.isNullAt(0)) None else Some(r.getTimestamp(0))
         val curSig = sigStr(r.getLong(1), r.get(2))
         val advanced = mx.exists(_.getTime > p.getTime)
-        if (!advanced && sidecar.flatMap(_._2).contains(curSig))
-          // provably nothing new: empty sliver, sidecar already current
-          Sliver(df.limit(0), narrowed = true, advance = () => ())
+        if (!advanced && sc.sig.contains(curSig))
+          // provably nothing new: empty sliver. The mark and signature
+          // are already current; a moved listing (same rows under new
+          // file names) is re-stamped so the next run's listing proof
+          // holds again
+          new Sliver(df.limit(0), narrowed = true, empty = true,
+            advance = () => if (listing.isDefined) record(p, curSig))
         else {
           val newMark = (Seq(p) ++ mx).maxBy(_.getTime)
           // unadvanced mark ⇒ no df row sits above p, so the re-admit
@@ -508,13 +561,14 @@ final class Incremental(spark: SparkSession,
           // signed — reuse it instead of a second aggregate (the
           // late-row-inside-window case pays one pass, not two)
           val newSig = if (!advanced) curSig else windowSig(newMark)
-          Sliver(df, narrowed = true, () => record(newMark, newSig))
+          new Sliver(df, narrowed = true, empty = false,
+            () => record(newMark, newSig))
         }
       case None =>
         val m = df.agg(max(col(arrivalCol).cast("timestamp"))).first()
         val sliverMax = if (m.isNullAt(0)) None else Some(m.getTimestamp(0))
         val recorded = sliverMax.map(ts => (ts, windowSig(ts)))
-        Sliver(df, narrowed = false, () =>
+        new Sliver(df, narrowed = false, empty = false, () =>
           recorded.foreach { case (ts, sig) => record(ts, sig) })
     }
   }
@@ -671,9 +725,11 @@ final class Incremental(spark: SparkSession,
       val touched = touched0.filter(p =>
         sigAt(sigU, p) != sigAt(sigR, p))
       System.err.println(s"[inc] $targetPath: ${touched0.size} touched," +
-        s" ${touched.size} changed -> rewrite ${touched.mkString(",")}" +
+        s" ${touched.size} changed" +
+        (if (touched.isEmpty) ", nothing to rewrite"
+         else s" -> rewrite ${touched.mkString(",")}") +
         (if (touched.size < touched0.size)
-           s"; skip ${touched0.filterNot(touched.contains).mkString(",")}"
+           s"; unchanged ${touched0.filterNot(touched.contains).mkString(",")}"
          else ""))
       if (touched.isEmpty) return false
       val existing = target()

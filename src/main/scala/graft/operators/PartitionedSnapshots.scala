@@ -234,7 +234,7 @@ object PartitionedSnapshots {
   def setStatsAutoLimit(t: String, n: Int,
       store: CommitStore = CommitStore.local): Unit = {
     require(n >= 0, s"stats_num_cols must be >= 0, got $n")
-    withCommitLock(t, store) {
+    Incremental.withCommitLock(t, store) {
       updateProps(t, Map("stats_num_cols" -> n.toString), store = store)
     }
   }
@@ -275,7 +275,7 @@ object PartitionedSnapshots {
     * simply records nothing for them (fail-safe KEEP). */
   def setStatsColumns(t: String, cols: Seq[String],
       store: CommitStore = CommitStore.local): Unit =
-    withCommitLock(t, store) {
+    Incremental.withCommitLock(t, store) {
       if (cols.map(_.trim).filter(_.nonEmpty) == Seq("auto"))
         updateProps(t, Map.empty, remove = Seq("zonemap_cols"),
           store = store)
@@ -388,7 +388,7 @@ object PartitionedSnapshots {
       if (gained == 0) return 0
       val byPart = (enriched ++ fine).groupBy(_.part)
       // ── the SHORT critical section: re-validate + atomic rewrite ─
-      val committed = withCommitLock(t, store) {
+      val committed = Incremental.withCommitLock(t, store) {
         if (!currentVersion(t, store).contains(cur)) false
         else {
           // atomicWrite (via atomic=true): this rewrites the
@@ -670,7 +670,7 @@ object PartitionedSnapshots {
       // withCommitLock: the per-version lock take must outwait a
       // concurrent writer's transient (ms-scale) commit section
       // rather than abort the whole migration on the first collision
-      withCommitLock(t, store) {
+      Incremental.withCommitLock(t, store) {
         if (hasManifest(t, v, store)) {
           val m = manifest(t, v, store)
           // a pre-horizon version kept only as a DATA OWNER — vacuum
@@ -878,7 +878,7 @@ object PartitionedSnapshots {
     * normal commit path. Refuses over an existing committed table. */
   def initTable(t: String, partCol: String, schemaJson: String,
       store: CommitStore = CommitStore.local): Unit =
-    withCommitLock(t, store) {
+    Incremental.withCommitLock(t, store) {
       if (currentVersion(t, store).isDefined)
         throw new IllegalStateException(
           s"$t already has committed data — cannot re-declare it")
@@ -903,7 +903,7 @@ object PartitionedSnapshots {
       dataType: org.apache.spark.sql.types.DataType,
       store: CommitStore = CommitStore.local): Unit = {
     import org.apache.spark.sql.types.{StructField, StructType}
-    withCommitLock(t, store) {
+    Incremental.withCommitLock(t, store) {
       // base = what a reader sees today: the current version's file
       // schema (mergeSchema union across evolved footers), widened by
       // any declared-only columns from a previous CREATE/ALTER
@@ -1198,7 +1198,7 @@ object PartitionedSnapshots {
     * [[restore]] for rollback — it preserves linear history). */
   def publish(t: String, v: Long,
       store: CommitStore = CommitStore.local): Unit =
-    withCommitLock(t, store) {
+    Incremental.withCommitLock(t, store) {
       // manifest-FILE existence, not emptiness: an empty staged batch
       // is a legitimate version (same hasManifest rule as every other
       // dispatch site)
@@ -1279,7 +1279,7 @@ object PartitionedSnapshots {
       lockHeld: Boolean = false,
       publish: Boolean = true): Either[String, Long] = {
     def locked[A](body: => A): A =
-      if (lockHeld) body else withCommitLock(t, store)(body)
+      if (lockHeld) body else Incremental.withCommitLock(t, store)(body)
     val base = currentVersion(t, store)
     if (requireBase && base.isEmpty) throw new IllegalStateException(
       s"$t has no committed snapshot")
@@ -1502,24 +1502,6 @@ object PartitionedSnapshots {
         msg.contains("FileNotFoundException") ||
         msg.contains("PATH_NOT_FOUND")
       missing && msg.contains(t)
-    }
-
-  /** The table lock is NON-blocking ([[Incremental.acquire]] throws on
-    * contention — the right contract for long data-writing holders,
-    * where queueing would hide a stall). A DML writer's reserve and
-    * commit sections, and every writer whose lock section holds only
-    * metadata work (publish, initTable, addColumn, the stats and index
-    * prop setters), last milliseconds, so contention there is
-    * transient by construction: spin with exponential backoff until
-    * the lock frees, bounded by the staleness horizon (a holder older
-    * than that is stolen by acquire itself). This is what lets N
-    * racing writers all commit instead of all-but-one refusing at the
-    * lock. */
-  private def withCommitLock[A](t: String, store: CommitStore)
-      (body: => A): A =
-    Incremental.spinOnContention() {
-      Incremental.withLock(t, Incremental.DefaultLockStaleMs,
-        store)(body)
     }
 
   /** Daemon that keeps an optimistic preparation's `.inflight` marker
@@ -2411,7 +2393,7 @@ object PartitionedSnapshots {
     // staleness note); locked (props are a read-modify-write file) and
     // spin-wrapped so a concurrent writer's transient hold never fails
     // a finished index build
-    withCommitLock(t, store) {
+    Incremental.withCommitLock(t, store) {
       updateProps(t, Map("zonemap" -> cols.mkString(",")), store = store)
     }
     v
@@ -2431,7 +2413,7 @@ object PartitionedSnapshots {
       dirs => BloomIndex.collect(spark, dirs, cols,
         expectedItemsPerFile, fpp))
     // see buildZoneMap's note on the prop
-    withCommitLock(t, store) {
+    Incremental.withCommitLock(t, store) {
       updateProps(t, Map("bloomidx" -> cols.mkString(",")), store = store)
     }
     v

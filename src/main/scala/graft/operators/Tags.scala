@@ -41,7 +41,7 @@ object Tags {
       replace: Boolean = false,
       store: CommitStore = CommitStore.local): Long = {
     validate(name)
-    Incremental.withLock(t, Incremental.DefaultLockStaleMs, store) {
+    Incremental.withCommitLock(t, store) {
       val cur = PartitionedSnapshots.currentVersion(t, store).getOrElse(
         throw new IllegalStateException(
           s"$t has no committed snapshot to tag"))
@@ -81,7 +81,7 @@ object Tags {
     * @return true iff the tag existed. */
   def drop(t: String, name: String,
       store: CommitStore = CommitStore.local): Boolean =
-    Incremental.withLock(t, Incremental.DefaultLockStaleMs, store) {
+    Incremental.withCommitLock(t, store) {
       store.delete(tagPath(t, name))
     }
 

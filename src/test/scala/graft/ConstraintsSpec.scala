@@ -36,6 +36,23 @@ class ConstraintsSpec extends AnyFunSuite {
     assert(PS.read(spark, t).count() == 2)
   }
 
+  test("a constraint writer waits out a held table lock: add started " +
+      "while another holder keeps the lock ~200 ms succeeds once it is " +
+      "released") {
+    val t = tmp()
+    PS.write(spark, t, Seq((1L, "A", 5.0)).toDF("k", "d", "qty"), "d")
+    // another writer's reservation or commit section holding the lock
+    val tok = graft.operators.Incremental.acquire(t)
+    val holder = new Thread(() => {
+      Thread.sleep(200)
+      graft.operators.Incremental.release(t, tok)
+    })
+    holder.start()
+    Constraints.add(spark, t, "qty_pos", "qty > 0")
+    holder.join()
+    assert(Constraints.list(t) == Map("qty_pos" -> "qty > 0"))
+  }
+
   test("add refuses when existing rows violate; NULL passes like SQL " +
       "CHECK; drop lifts the gate") {
     val t = tmp()

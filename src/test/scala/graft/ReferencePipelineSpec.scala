@@ -1,8 +1,14 @@
 package graft
 
 import graft.etl.ReferencePipeline
+import graft.operators.Incremental
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
+  SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
+import java.nio.file.{Files, Path, Paths}
 
 /** The dbt_runner equivalence, end-to-end: generator bronze → all 16
   * models materialized with the reference's materialization configs →
@@ -198,5 +204,189 @@ class ReferencePipelineSpec extends AnyFunSuite {
     p.run(ev6, ord6)
     assert(mtimes("dim_users") == before,
       "dim_users rebuilt on a provably-unchanged run after recovery")
+  }
+
+  // ── file-backed bronze: the listing proof's input ──
+
+  /** Append the fixture's batches `from` and later to a bronze dir, one
+    * batch per file, as an ingest would: earlier files stay untouched. */
+  private def appendBronze(dir: String, hours: Int, from: Int): Unit = {
+    val (ev, ord) = ReferenceFixtures.bronze(spark, hours)
+    (from until hours).foreach { h =>
+      ev.filter(col("batch_id") === h).coalesce(1).write.mode("append")
+        .parquet(s"$dir/clickstream")
+      ord.filter(col("batch_id") === h).coalesce(1).write.mode("append")
+        .parquet(s"$dir/orders")
+    }
+  }
+
+  private def readBronze(dir: String): (DataFrame, DataFrame) =
+    (spark.read.parquet(s"$dir/clickstream"),
+      spark.read.parquet(s"$dir/orders"))
+
+  /** Every regular file under `dir` (data, `.__wm` and `.__deps`
+    * sidecars alike) with its mtime. */
+  private def filesUnder(dir: String): Map[String, Long] = {
+    val s = Files.walk(Paths.get(dir))
+    try s.toArray.map(_.asInstanceOf[Path])
+      .filter(f => Files.isRegularFile(f))
+      .map(f => f.toString -> Files.getLastModifiedTime(f).toMillis).toMap
+    finally s.close()
+  }
+
+  /** Spark jobs `body` starts outside the check gates: a job counts
+    * unless its call site, or that of the SQL execution it belongs to
+    * (a broadcast's job runs on another thread), passes through
+    * `Quality`. A marker job run after `body` proves the listener has
+    * seen every earlier job. */
+  private def jobsOutsideGates(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val fence = s"fence-${java.util.UUID.randomUUID()}"
+    val events = new java.util.concurrent.ConcurrentLinkedQueue[
+      SparkListenerEvent]
+    val fenced = new java.util.concurrent.CountDownLatch(1)
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(p =>
+            p.getProperty("spark.job.description") == fence))
+          fenced.countDown()
+        else { events.add(e); () }
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => events.add(s); ()
+        case _ =>
+      }
+    }
+    sc.addSparkListener(l)
+    try {
+      body
+      sc.setJobDescription(fence)
+      try spark.range(1).count() finally sc.setJobDescription(null)
+      assert(fenced.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally sc.removeSparkListener(l)
+    import scala.jdk.CollectionConverters._
+    def gate(details: String) = details.contains("graft.operators.Quality")
+    val gateExecs = events.asScala.collect {
+      case s: SparkListenerSQLExecutionStart if gate(s.details) =>
+        s.executionId.toString }.toSet
+    events.asScala.count {
+      case j: SparkListenerJobStart =>
+        !j.stageInfos.exists(st => gate(st.details)) &&
+          !Option(j.properties)
+            .flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+            .exists(gateExecs)
+      case _ => false
+    }
+  }
+
+  private def rowsOf(p: ReferencePipeline, m: String) =
+    TestSpark.rows(p.table(m).select(p.table(m).columns.sorted.map(col): _*))
+
+  test("no-data tick over file-backed bronze: every incremental model is " +
+      "skipped on its listing proof, so no file or sidecar under the " +
+      "warehouse changes and no Spark job runs outside the check gates") {
+    val base = Files.createTempDirectory("graft_refpipe_noop").toString
+    val bronze = Files.createTempDirectory("graft_refpipe_bz").toString
+    appendBronze(bronze, 6, from = 0)
+    val p = new ReferencePipeline(spark, base)
+    val (ev, ord) = readBronze(bronze)
+    p.run(ev, ord)
+    val before = filesUnder(base)
+    assert(before.keys.count(_.endsWith(".__wm")) == 7,
+      "one sliver sidecar per incremental model but fact_sessions")
+
+    val (ev2, ord2) = readBronze(bronze) // the caller's reads, not run's
+    var results = Seq.empty[graft.operators.Quality.CheckResult]
+    val jobs = jobsOutsideGates { results = p.run(ev2, ord2) }
+    assert(results.size == 110 && results.forall(_.passed))
+    assert(filesUnder(base) == before,
+      "the no-data tick wrote, rewrote or removed a file")
+    assert(jobs == 0, s"$jobs Spark jobs ran outside the check gates")
+  }
+
+  test("listing proof falls back to the row proof: a bronze file renamed " +
+      "with identical rows is proved empty by rows and re-stamped; a new " +
+      "bronze file's arrivals are processed like a sliver = false rebuild") {
+    val base = Files.createTempDirectory("graft_refpipe_fp").toString
+    val bronze = Files.createTempDirectory("graft_refpipe_bz").toString
+    appendBronze(bronze, 6, from = 0)
+    val p = new ReferencePipeline(spark, base)
+    p.run(readBronze(bronze)._1, readBronze(bronze)._2)
+    def dataFiles() = filesUnder(base).filter { case (f, _) =>
+      !f.endsWith(".__wm") }
+    val before = dataFiles()
+    val evPath = p.modelPaths("stg_clickstream_events")
+    val markBefore = new Incremental(spark)
+      .processedThrough(evPath, "pipeline_ingested_at")
+    def wm() = new String(Files.readAllBytes(Paths.get(evPath + ".__wm")),
+      "UTF-8")
+    val wmBefore = wm()
+
+    // the same rows under a new file name: the listing moves, the rows
+    // do not
+    val dir = Paths.get(bronze, "clickstream")
+    val victim = {
+      val s = Files.list(dir)
+      try s.toArray.map(_.asInstanceOf[Path])
+        .filter(_.getFileName.toString.endsWith(".parquet")).minBy(_.toString)
+      finally s.close()
+    }
+    Files.move(victim, dir.resolve("part-renamed-" + victim.getFileName))
+    Files.deleteIfExists(dir.resolve(s".${victim.getFileName}.crc"))
+    val (ev, ord) = readBronze(bronze)
+    val jobs = jobsOutsideGates { p.run(ev, ord) }
+    assert(jobs > 0, "a moved listing must fall through to the row proof")
+    assert(dataFiles() == before, "an identical-rows rename rebuilt a model")
+    assert(new Incremental(spark).processedThrough(evPath,
+      "pipeline_ingested_at") == markBefore)
+    assert(wm() != wmBefore,
+      "the row-proven empty sliver re-stamps the new listing")
+    // ...so the next no-data tick is listing-proven again
+    val (ev2, ord2) = readBronze(bronze)
+    assert(jobsOutsideGates { p.run(ev2, ord2) } == 0)
+
+    // new arrivals in a new file: processed, and every model equals a
+    // full-overlap (sliver = false) build of the same bronze
+    appendBronze(bronze, 9, from = 6)
+    val (ev9, ord9) = readBronze(bronze)
+    p.run(ev9, ord9)
+    val scratch = new ReferencePipeline(spark,
+      Files.createTempDirectory("graft_refpipe_fps").toString,
+      sliver = false)
+    scratch.run(ev9, ord9)
+    p.modelPaths.keys.foreach { m =>
+      assert(rowsOf(p, m) == rowsOf(scratch, m),
+        s"$m: incremental over new bronze != sliver = false rebuild")
+    }
+  }
+
+  test("fact_sessions crash window: a run that dies at fact_sessions, " +
+      "after both session-feeding staging models committed, loses no " +
+      "touched session on the next run") {
+    val base = Files.createTempDirectory("graft_refpipe_fs").toString
+    val bronze = Files.createTempDirectory("graft_refpipe_bz").toString
+    appendBronze(bronze, 6, from = 0)
+    val p = new ReferencePipeline(spark, base)
+    p.run(readBronze(bronze)._1, readBronze(bronze)._2)
+    appendBronze(bronze, 9, from = 6)
+
+    // the crashed run: fact_sessions' lock is held, so the run throws
+    // there, after stg_clickstream_sessions and stg_orders committed
+    val fs = p.modelPaths("fact_sessions")
+    val tok = Incremental.acquire(fs)
+    try intercept[Incremental.ConcurrentWriteException] {
+      p.run(readBronze(bronze)._1, readBronze(bronze)._2)
+    } finally Incremental.release(fs, tok)
+
+    val (ev9, ord9) = readBronze(bronze)
+    p.run(ev9, ord9)
+    val scratch = new ReferencePipeline(spark,
+      Files.createTempDirectory("graft_refpipe_fss").toString,
+      sliver = false)
+    scratch.run(ev9, ord9)
+    val (got, want) =
+      (rowsOf(p, "fact_sessions"), rowsOf(scratch, "fact_sessions"))
+    val differ = (want -- got).size + (got -- want).size
+    assert(differ == 0, s"fact_sessions differs from the rebuild in " +
+      s"$differ rows: the crashed run's touched sessions were lost")
   }
 }
