@@ -105,8 +105,11 @@ final class ReferencePipeline(spark: SparkSession, baseDir: String,
 
   /** The same fingerprint over a frame's own file index — the files its
     * scan reads, listed when the frame was built — plus its read schema.
-    * None unless the frame is a bare file scan: anything on top of the
-    * relation could change its rows while the files stay put. */
+    * Each file also contributes its modification time: bronze files come
+    * from outside the pipeline, and a writer that reuses file names can
+    * rewrite one in place with the same size but other rows. None unless
+    * the frame is a bare file scan: anything on top of the relation
+    * could change its rows while the files stay put. */
   private def fileIndexFp(df: DataFrame): Option[String] =
     Some(df.queryExecution.analyzed).collect {
       case lr: LogicalRelation => lr.relation
@@ -117,7 +120,7 @@ final class ReferencePipeline(spark: SparkSession, baseDir: String,
           val path = f.getPath.toString
           val rel = roots.find(path.startsWith).fold(path)(r =>
             path.drop(r.length))
-          s"$rel:${f.getLen}"
+          s"$rel:${f.getLen}:${f.getModificationTime}"
         }.sorted)
     }
 

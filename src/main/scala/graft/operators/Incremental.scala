@@ -463,11 +463,14 @@ final class Incremental(spark: SparkSession,
     * "Nothing new" is proved in two steps, cheapest first, and yields
     * an `empty` sliver the consumer may skip outright:
     *  - LISTING PROOF: `listing` is a fingerprint of the source's file
-    *    listing (relative paths and sizes), which the sidecar records
-    *    next to the mark. When it equals the recorded one, the source
-    *    holds exactly the files the recorded mark was computed over, so
-    *    the sliver is empty with no Spark job and without building
-    *    `source` at all. The caller takes the listing BEFORE the sliver
+    *    listing, which the sidecar records next to the mark. It must
+    *    move whenever the source's rows can: relative paths and sizes
+    *    suffice for a source whose writer never rewrites a file under
+    *    its old name (a model materialization), while files written
+    *    from outside also need their modification times. When it equals
+    *    the recorded one, the source holds the files the recorded mark
+    *    was computed over, unchanged, so the sliver is empty with no
+    *    Spark job and without building `source` at all. The caller takes the listing BEFORE the sliver
     *    scans the source, so the recorded fingerprint never covers more
     *    than the scan read: a file that lands (or is replaced) in
     *    between is read but not fingerprinted, the next run's listing

@@ -6,9 +6,9 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
   SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, expr, input_file_name, when}
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 /** The dbt_runner equivalence, end-to-end: generator bronze → all 16
   * models materialized with the reference's materialization configs →
@@ -356,6 +356,60 @@ class ReferencePipelineSpec extends AnyFunSuite {
     p.modelPaths.keys.foreach { m =>
       assert(rowsOf(p, m) == rowsOf(scratch, m),
         s"$m: incremental over new bronze != sliver = false rebuild")
+    }
+  }
+
+  /** Rewrite one bronze file under its own name as a single
+    * uncompressed, dictionary-free parquet file holding `f` of its rows:
+    * a fixed-width value changed this way keeps the file's size. */
+  private def rewriteInPlace(file: Path)(f: DataFrame => DataFrame): Unit = {
+    val tmp = Files.createTempDirectory("graft_refpipe_rw")
+    f(spark.read.parquet(file.toString)).coalesce(1).write
+      .option("compression", "none")
+      .option("parquet.enable.dictionary", "false")
+      .mode("overwrite").parquet(tmp.toString)
+    val out = {
+      val s = Files.list(tmp)
+      try s.toArray.map(_.asInstanceOf[Path])
+        .filter(_.getFileName.toString.endsWith(".parquet")).head
+      finally s.close()
+    }
+    Files.move(out, file, StandardCopyOption.REPLACE_EXISTING)
+    Files.deleteIfExists(file.resolveSibling(s".${file.getFileName}.crc"))
+  }
+
+  test("listing proof sees an in-place rewrite: a bronze file rewritten " +
+      "under its own name with the same size but other rows is processed") {
+    val base = Files.createTempDirectory("graft_refpipe_rw").toString
+    val bronze = Files.createTempDirectory("graft_refpipe_bz").toString
+    appendBronze(bronze, 6, from = 0)
+    // the latest-arriving order sits inside every re-admit window
+    val latest = readBronze(bronze)._2
+      .select(input_file_name(), col("order_id"),
+        col("order_time").cast("timestamp"), col("pipeline_ingested_at"))
+      .orderBy(col("pipeline_ingested_at").desc).first()
+    val file = Paths.get(
+      new org.apache.hadoop.fs.Path(latest.getString(0)).toUri.getPath)
+    val orderId = latest.getString(1)
+    val want = new java.sql.Timestamp(latest.getTimestamp(2).getTime + 1000)
+    rewriteInPlace(file)(identity) // same rows, size-stable encoding
+    val p = new ReferencePipeline(spark, base)
+    p.run(readBronze(bronze)._1, readBronze(bronze)._2)
+    val (size, mtime) = (Files.size(file), Files.getLastModifiedTime(file))
+
+    // a writer that reuses file names replaces the file: one order's
+    // order_time moves by a second, nothing else changes
+    rewriteInPlace(file)(_.withColumn("order_time",
+      when(col("order_id") === orderId,
+        col("order_time") + expr("INTERVAL 1 SECOND"))
+        .otherwise(col("order_time"))))
+    assert(Files.size(file) == size, "the rewrite must keep the file size")
+    assert(Files.getLastModifiedTime(file) != mtime)
+    p.run(readBronze(bronze)._1, readBronze(bronze)._2)
+    Seq("stg_orders", "fact_orders").foreach { m =>
+      val got = p.table(m).filter(col("order_id") === orderId)
+        .select(col("order_ts")).collect().map(_.getTimestamp(0)).toSeq
+      assert(got == Seq(want), s"$m did not pick up the rewritten order")
     }
   }
 

@@ -6,11 +6,10 @@
 
 Run from the repository root. The change side is this checkout's working
 tree; the parent side is `git archive <--base>` (default HEAD, so an
-uncommitted change is compared with its parent commit) unpacked into
---work (default: a new temporary directory, removed at the end; an
-existing --work holding the same revision is reused with its build).
-Pair i runs `python3 perfbench/run.py --workload W --seed S+i --seconds N
---trace 0`, N being BENCHMARK.json's run_seconds, once on each side with
+uncommitted change is compared with its parent commit) unpacked into a
+new temporary directory, removed at the end. Pair i runs
+`python3 perfbench/run.py --workload W --seed S+i --seconds N --trace 0`,
+N being BENCHMARK.json's run_seconds, once on each side with
 the same seed, and flips which side runs first from one pair to the next.
 Each side builds itself on its first run; perfbench itself is only
 called, never changed.
@@ -18,12 +17,13 @@ called, never changed.
 For every end-to-end metric of BENCHMARK.json it prints each side's
 median and quartiles, the pairs the change won (ties count for neither)
 and the verdict the benchmark applies: a gain holds only when the change
-won at least nine tenths of the pairs and the medians differ by more than
-the parent's interquartile range; the change's median may not exceed the
-parent's by more than the metric's bound, and where the parent's spread
-is wider than the bound the comparison is unresolved. A run that fails
-(non-zero exit, no metrics) is reported and leaves its pair out. The last
-stdout line is the summary as JSON.
+won at least nine tenths of all pairs run, the medians differ by more than
+the parent's interquartile range and the change failed no more runs than
+the parent; the change's median may not exceed the parent's by more than
+the metric's bound, and where the parent's spread is wider than the bound
+the comparison is unresolved. A run that fails (non-zero exit, no
+metrics) is reported, leaves its pair out of the medians and counts as a
+pair the change did not win. The last stdout line is the summary as JSON.
 """
 import argparse
 import json
@@ -45,24 +45,14 @@ def git(*args):
 
 
 def checkout(rev, work):
-    """Unpack `rev` into `work`, unless it already holds that revision."""
+    """Unpack `rev` into the empty directory `work`; return its sha."""
     sha = git("rev-parse", "--verify", f"{rev}^{{commit}}")
-    marker = os.path.join(work, ".pairs-rev")
-    if os.path.exists(marker) and open(marker).read().strip() == sha:
-        return sha
-    if os.path.exists(work) and os.listdir(work):
-        if not os.path.exists(marker):
-            sys.exit(f"{work} is not empty and holds no earlier checkout")
-        shutil.rmtree(work)
-    os.makedirs(work, exist_ok=True)
     archive = subprocess.Popen(["git", "-C", ROOT, "archive", sha],
                                stdout=subprocess.PIPE)
     subprocess.run(["tar", "-x", "-C", work], stdin=archive.stdout,
                    check=True)
     if archive.wait() != 0:
         sys.exit(f"git archive {rev} failed")
-    with open(marker, "w") as f:
-        f.write(sha + "\n")
     return sha
 
 
@@ -92,8 +82,10 @@ def quartiles(xs):
     return q[0], q[2]
 
 
-def verdict(parent, change, better, bound):
-    """The benchmark's reading of one metric over the complete pairs."""
+def verdict(parent, change, better, bound, pairs_run, failed):
+    """The benchmark's reading of one metric: medians and wins over the
+    complete pairs, the win threshold over all `pairs_run`, and no gain
+    while the change failed more runs than the parent (`failed`)."""
     n = len(parent)
     sign = 1 if better == "lower" else -1
     wins = sum(1 for p, c in zip(parent, change) if sign * (p - c) > 0)
@@ -104,7 +96,9 @@ def verdict(parent, change, better, bound):
     gap = sign * (pm - cm)  # > 0: the change is better
     worse_by = -gap / pm if pm else 0.0
     all_better = all(sign * (p - c) > 0 for p in parent for c in change)
-    if wins >= math.ceil(0.9 * n) and gap > iqr:
+    if failed["change"] > failed["parent"]:
+        reading = "no gain (the change failed more runs)"
+    elif wins >= math.ceil(0.9 * pairs_run) and gap > iqr:
         reading = "gain"
     elif worse_by > bound:
         reading = "regression beyond bound"
@@ -112,7 +106,7 @@ def verdict(parent, change, better, bound):
         reading = "unresolved (parent spread wider than the bound)"
     else:
         reading = "within bound, no gain"
-    return {"pairs": n, "wins": wins,
+    return {"pairs": pairs_run, "complete_pairs": n, "wins": wins,
             "parent": {"median": pm, "q1": pq1, "q3": pq3},
             "change": {"median": cm, "q1": cq1, "q3": cq3},
             "parent_iqr": iqr, "median_change": (cm - pm) / pm if pm else 0.0,
@@ -126,18 +120,16 @@ def main():
     ap.add_argument("--seed", type=int, default=101,
                     help="seed of the first pair; pair i uses seed + i")
     ap.add_argument("--base", default="HEAD", help="parent revision")
-    ap.add_argument("--work", default=None,
-                    help="directory for the parent checkout")
     a = ap.parse_args()
 
     bench = json.load(open(os.path.join(ROOT, "BENCHMARK.json")))
     seconds = bench["run_seconds"]
     metrics = bench["end_to_end"]
-    work = a.work or tempfile.mkdtemp(prefix="pairs-parent-")
-    sha = checkout(a.base, work)
+    work = tempfile.mkdtemp(prefix="pairs-parent-")
     sides = {"parent": work, "change": ROOT}
     runs = {"parent": [], "change": []}
     try:
+        sha = checkout(a.base, work)
         for i in range(a.pairs):
             seed = a.seed + i
             order = ("parent", "change") if i % 2 == 0 else ("change", "parent")
@@ -152,24 +144,23 @@ def main():
             for side in runs:
                 runs[side].append(got[side])
     finally:
-        if a.work is None:
-            shutil.rmtree(work, ignore_errors=True)
+        shutil.rmtree(work, ignore_errors=True)
 
     complete = [i for i in range(a.pairs)
                 if runs["parent"][i] is not None
                 and runs["change"][i] is not None]
+    failed = {s: sum(r is None for r in runs[s]) for s in runs}
     summary = {"workload": a.workload, "base": sha,
                "seeds": [a.seed + i for i in range(a.pairs)],
-               "failed_runs": {s: sum(r is None for r in runs[s])
-                               for s in runs},
-               "metrics": {}}
+               "failed_runs": failed, "metrics": {}}
     for m in metrics:
         name = m["name"]
         par = [runs["parent"][i][name] for i in complete]
         chg = [runs["change"][i][name] for i in complete]
         if not par:
             continue
-        v = verdict(par, chg, m.get("better", "lower"), m["bound"])
+        v = verdict(par, chg, m.get("better", "lower"), m["bound"],
+                    a.pairs, failed)
         v["parent_runs"], v["change_runs"] = par, chg
         summary["metrics"][name] = v
         print(f"{name}: parent {v['parent']['median']:.2f} "
